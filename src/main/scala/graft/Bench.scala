@@ -4,52 +4,28 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: one JSON line of per-query wall times at the target
   * scale factor, printed to stdout on completion.
   *
-  * Round-4 lesson: the suite doubled to 188 queries and the driver's
-  * bench run was killed at its timeout (rc 124) with ZERO numbers —
-  * an unbounded sweep is worthless the moment it doesn't finish. This
-  * version is budget-aware and interruption-safe:
-  *
   *   - A wall-clock budget (`SPARK_GRAFT_BENCH_BUDGET_SEC`, default
-  *     900 s) bounds the whole run. The timed sweep stops at 95% of
-  *     budget; whatever remains is recorded with sentinel -2.0
-  *     (skipped) rather than silently dropped, so the emitted line
+  *     900 s) bounds the run. The timed sweep stops at 95% of it; every
+  *     query not reached records sentinel -2.0 (skipped), so the line
   *     always covers every query name.
-  *   - After EVERY timed query a cumulative JSON line (same schema as
-  *     the final line) goes to stderr — if an external timeout kills
-  *     the process anyway, the captured output tail still carries the
-  *     numbers measured so far. stdout stays exactly one line.
-  *   - Round-8 lesson: a single head-of-sweep warm-up pass stopped
-  *     fitting once the suite crossed ~370 queries — the tail ran
-  *     cold (19.7 s reported for a 2.8 s query) and the NEWEST
-  *     queries, the ones a bench most needs to measure, were the ones
-  *     skipped at -2.0. Two changes: (a) each query is warmed at
-  *     sf0.001 immediately before its own timed slot, so warm-up
-  *     coverage is exactly the sweep's coverage, never more; (b) the
-  *     sweep runs newest-id-first, so if the budget runs out it is
-  *     long-stable early queries that carry -2.0, never this round's
-  *     additions. The artifact line is still emitted in numeric order.
-  *   - A query that throws records sentinel -1.0, never a plausible-
-  *     looking elapsed time (round-4 advice: `timed` used to swallow
-  *     failures into timings).
-  *   - r15: a query that exceeds the per-query wall cap
-  *     (`SPARK_GRAFT_BENCH_QUERY_CAP_SEC`, default 120 s) records
-  *     sentinel -3.0 (timeout) and the sweep continues — one
-  *     pathological regression can no longer starve the rest of the
-  *     registry into -2.0 skips (the r14 failure mode).
-  *   - Rerun policy: a second pass (min of two) for every query the
-  *     RESERVATION projection allows — granted only while the
-  *     projected cost of single-passing all remaining queries still
-  *     fits the deadline. Sub-second timings are JIT/GC-noise
-  *     dominated and the r11 round showed the 1–5 s band carries the
-  *     same one-shot noise under slot isolation; but coverage beats a
-  *     second sample, so the tail's single passes are reserved first
-  *     (an unconditional double-pass starved 74 queries into -2.0
-  *     skips once).
-  *
-  * A warm-up pass at sf0.001 runs first (untimed) so measurements
-  * capture steady-state execution, not Janino/JIT compilation of each
-  * query's generated code — on a cold JVM that tax dominates
-  * small-scale timings (observed 6 s → 0.7 s for the same query).
+  *   - The sweep runs newest id first, so a budget cut skips the
+  *     long-stable early queries; the line is in numeric id order.
+  *   - Each query is warmed at sf0.001 (untimed) just before its own
+  *     timed slot, unless single passes of the remaining queries barely
+  *     fit the budget.
+  *   - A query that throws records sentinel -1.0; one that exceeds the
+  *     per-query cap (`SPARK_GRAFT_BENCH_QUERY_CAP_SEC`, default 120 s)
+  *     is cancelled and records -3.0, and the sweep continues.
+  *   - After every timed query a cumulative line (same schema) goes to
+  *     stderr, so a killed run still leaves the numbers measured so far.
+  *   - After the sweep, the remaining budget re-times queries slowest
+  *     first; a re-timed query reports the min of its two passes, and
+  *     `passes` records 0, 1 or 2 per query.
+  *   - A fixed calibration probe (lineitem scan + aggregates) is timed
+  *     at the start, middle and end of the sweep, to tell a throttled
+  *     host from a regression.
+  *   - Full sweeps (no `SPARK_GRAFT_BENCH_ONLY`) also write the line to
+  *     `bench_full.json`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.nio.file.{Files, Paths}
+
+import graft.pipeline.CallsPipeline
 
 /** Dev tool (not part of the driver contract): writes
   * `.explain("formatted")` output for named queries to a directory —
@@ -9,6 +11,11 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.PlanDump <outDir> <suffix> q330_hits,q414_scd2_from_feed
   * Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   *        SPARK_GRAFT_CPUS (default 32).
+  *
+  * Besides registry names it takes `calls_pipeline`: the
+  * transform → dedup → aggregate frame [[CallsPipeline.frame]]
+  * over an empty [[CallsPipeline.IngestSchema]] parquet input
+  * (the plan does not depend on the rows).
   *
   * Session config matches Bench exactly so the dumped plan is the plan
   * the bench times (same shuffle partitions, same AQE defaults).
@@ -28,7 +35,9 @@ object PlanDump {
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.filter { case (n, _) => names.contains(n) }.foreach { case (name, fn) =>
+    val frames: Seq[(String, (SparkSession, String) => DataFrame)] =
+      SparkEntry.queries.toSeq :+ ("calls_pipeline" -> callsPipeline _)
+    frames.filter { case (n, _) => names.contains(n) }.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
@@ -40,5 +49,12 @@ object PlanDump {
       } finally { spark.catalog.clearCache(); graft.operators.Scratch.sweep() }
     }
     spark.stop()
+  }
+
+  private def callsPipeline(spark: SparkSession, sfDir: String): DataFrame = {
+    val input = Files.createTempDirectory("plandump-calls").resolve("calls").toString
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), CallsPipeline.IngestSchema)
+      .write.parquet(input)
+    CallsPipeline.frame(spark.read.parquet(input))
   }
 }

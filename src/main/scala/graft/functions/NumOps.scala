@@ -44,6 +44,25 @@ object NumOps {
   def exactAvg(c: Column, scale: Int = 4): Column =
     roundAway(sum(c.cast(SumType)).cast("double") / count(c), scale)
 
+  /** [[exactAvg]] for a column whose values all have at most `inScale`
+    * decimals (e.g. `bround(_, inScale)` output), summed in a LONG of
+    * units of 10^-inScale instead of per-row decimal casts into a
+    * `decimal(35,6)` buffer.
+    *
+    * Bit-identical to `exactAvg(c, scale)` for `inScale` ≤ 6 while every
+    * |x| < min(2^32, 2^50 / 10^inScale) and every group's
+    * |Σx|·10^inScale < 2^53. Then each value's decimal cast and its
+    * `floor(x·10^inScale + 0.5)` both recover its exact unit count k, the
+    * long sum K = Σk is the decimal sum's unscaled value, and
+    * `K.toDouble / 10^inScale` is the same correctly rounded double the
+    * decimal→double cast yields. Values with more decimals are rounded
+    * half up to `inScale` first, where `exactAvg` would not round them.
+    */
+  def fixedScaleAvg(c: Column, inScale: Int, scale: Int = 4): Column = {
+    val p = math.pow(10.0, inScale)
+    roundAway(sum(floor(c * p + 0.5)).cast("double") / p / count(c), scale)
+  }
+
   /** Exact sum surfaced as a rounded double. */
   def exactSum(c: Column, scale: Int = 2): Column =
     roundAway(sum(c.cast(SumType)).cast("double"), scale)

@@ -29,17 +29,22 @@ object TimeOps {
     targets.foldLeft(df)((d, c) => d.withColumn(c, parseTimestamp(col(c), fmt)))
   }
 
-  /** (t2 - t1) in minutes, rounded to 2 decimals with HALF_EVEN
+  /** Decimal places the response-time deltas are rounded to: every
+    * [[timedeltaMinutes]] value is a multiple of 10^-DeltaScale.
+    */
+  val DeltaScale = 2
+
+  /** (t2 - t1) in minutes, rounded to [[DeltaScale]] decimals with HALF_EVEN
     * (`bround`) — pandas/numpy `round` is banker's rounding
     * (`app.py:290-312`); Spark's `round` is HALF_UP, a real parity trap
     * (SURVEY §7). Cast to double *before* subtraction keeps sub-second
     * precision, matching `.dt.total_seconds()`.
     */
-  def timedeltaMinutes(t2: Column, t1: Column, scale: Int = 2): Column = {
+  def timedeltaMinutes(t2: Column, t1: Column): Column = {
     // NTZ parquet timestamps can't cast to double directly; go through
     // timestamp_ltz (no-op shift under the engine's fixed UTC session tz).
     def secs(c: Column) = c.cast("timestamp_ltz").cast("double")
-    bround((secs(t2) - secs(t1)) / 60.0, scale)
+    bround((secs(t2) - secs(t1)) / 60.0, DeltaScale)
   }
 
   /** Cast-with-coerce: pandas `to_numeric(errors='coerce')`

@@ -1,29 +1,34 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.functions.TimeOps
-import graft.operators.{Dedup, DimAgg, Profiling}
+import graft.functions.{NumOps, TimeOps}
+import graft.operators.{Dedup, Profiling}
 import graft.sinks.RetryingSink
 
 /** The reference pipeline (`main_func`, `app.py:206-968`) end-to-end,
   * Spark-first: every stage is a declarative DataFrame transform, the
-  * whole run is ONE job graph with a single write action (the reference
-  * also materializes exactly once, at the Mongo insert — SURVEY §3),
-  * and Catalyst owns pushdown/pruning/partial-agg.
+  * whole run is ONE SQL action, the sink write (the reference also
+  * materializes exactly once, at the Mongo insert — SURVEY §3), and
+  * Catalyst owns pushdown/pruning/partial-agg.
   *
-  * Stage map (reference → here):
+  * Stage map (reference → here), in run order:
   *  - ingest: 19-col all-string schema (`app.py:61-83`) → [[IngestSchema]]
   *  - timestamp parse on *time* columns (`app.py:275-282`) → [[parseTimes]]
-  *  - 4 response-time metrics in minutes (`app.py:290-312`) → [[deriveTimedeltas]]
-  *  - calendar parts (`app.py:320-346`) → [[deriveDateParts]]
   *  - drop ~100%-null column (`app.py:316`) → [[dropSparse]]
   *  - dedup to best row per incident (`app.py:427-516`) → [[dedupBest]]
   *    (sort+index+groupmax+join collapses to one window — SURVEY §2.10)
+  *  - 4 response-time metrics in minutes (`app.py:290-312`) → [[deriveTimedeltas]]
+  *  - calendar parts (`app.py:320-346`) → [[deriveDateParts]]
   *  - 14-dim aggregate (`app.py:520-590`) → [[aggregate]]
   *  - truncate-and-load with retry (`app.py:645-740`) → RetryingSink
+  *
+  * The reference derives before it dedups; both derivations are per-row
+  * and the dedup reads neither, so deriving after it gives the same rows
+  * while computing them once per incident and shuffling the narrower
+  * parsed rows.
   */
 object CallsPipeline {
 
@@ -84,27 +89,41 @@ object CallsPipeline {
     Dedup.keepOnePerKey(df, Seq(col("event_number")), order, keep = Some(col("district").isNotNull))
   }
 
-  /** `get_agg`: countDistinct incidents + mean response times over the
-    * 14 dims; null keys kept (`dropna=False`), global semantics (the
-    * reference's per-partition variant is documented-weaker, SURVEY §2.5 A6).
+  /** `get_agg`: incident count + mean response times over the 14 dims;
+    * null keys kept (`dropna=False`), global semantics (the reference's
+    * per-partition variant is documented-weaker, SURVEY §2.5 A6).
+    *
+    * Takes [[dedupBest]]'s output: one row per `event_number`, so a
+    * plain `count` is the reference's `nunique` without the second,
+    * (dims + id)-keyed aggregation a distinct count plans as. The means
+    * sum the [[TimeOps.DeltaScale]]-decimal deltas in longs
+    * ([[NumOps.fixedScaleAvg]]), bit-identical to [[NumOps.exactAvg]].
     */
   def aggregate(df: DataFrame): DataFrame =
-    DimAgg.dimAgg(
-      df,
-      AggDims.map(col),
-      col("event_number"),
-      TimedeltaSpecs.map { case (name, _, _) => s"${name}_mean" -> col(name) }
-    )
+    df.groupBy(AggDims.map(col): _*)
+      .agg(
+        count(col("event_number")).as("n_distinct"),
+        TimedeltaSpecs.map { case (name, _, _) =>
+          NumOps.fixedScaleAvg(col(name), TimeOps.DeltaScale).as(s"${name}_mean")
+        }: _*
+      )
 
-  /** Full run: transform → dedup → aggregate → truncate-and-load.
-    * Returns (aggregate row count, sink attempts used).
+  /** transform → dedup → aggregate: the frame [[run]] loads. */
+  def frame(source: DataFrame): DataFrame =
+    aggregate(deriveDateParts(deriveTimedeltas(dedupBest(dropSparse(parseTimes(source))))))
+
+  /** Full run: [[frame]] → truncate-and-load, one write action per sink
+    * attempt. Returns (aggregate rows the write observed, sink attempts
+    * used); each attempt observes under a fresh name, since an
+    * `Observation` serves one action only.
     */
   def run(source: DataFrame, sinkPath: String): (Long, Int) = {
-    val transformed = deriveDateParts(deriveTimedeltas(parseTimes(source)))
-    val best = dedupBest(dropSparse(transformed))
-    val agg = aggregate(best)
-    val attempts = RetryingSink.overwriteParquet(agg, sinkPath)
-    (agg.sparkSession.read.parquet(sinkPath).count(), attempts)
+    val agg = frame(source)
+    RetryingSink.withRetry() { () =>
+      val rows = Observation(s"calls_pipeline_rows_${System.nanoTime()}")
+      agg.observe(rows, count(lit(1)).as("rows")).write.mode(SaveMode.Overwrite).parquet(sinkPath)
+      rows.get("rows").asInstanceOf[Long]
+    }
   }
 
   /** The profiling side-outputs of the reference run: per-column null

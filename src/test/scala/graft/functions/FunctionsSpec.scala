@@ -56,6 +56,28 @@ class FunctionsSpec extends SparkSpec {
     val a = base.agg(NumOps.exactAvg($"l_extendedprice").as("v")).head.getDouble(0)
     val b = base.repartition(17).agg(NumOps.exactAvg($"l_extendedprice").as("v")).head.getDouble(0)
     assert(a === b)
+
+    // 2-decimal grid: both signs, zero, nulls, an all-null group and
+    // magnitudes up to 1e9. fixedScaleAvg's long sums must give
+    // exactAvg's bits, in any partitioning.
+    val rnd = new scala.util.Random(7)
+    val cents = Seq(0L, 1L, 5L, 49L, 50L, 51L, 99L, 100L, 12345L, 98765432L, 99999999999L, 100000000000L)
+    val grid = (0 until 3000).map { i =>
+      val c = if (i < 2 * cents.size) cents(i % cents.size) else rnd.nextLong(100000000001L)
+      val v = if (i % 11 == 10) None else Some((if (i % 2 == 0) c else -c) / 100.0)
+      (if (i % 97 == 0) -1 else i % 13, v)
+    } ++ Seq((99, Option.empty[Double]), (99, Option.empty[Double]))
+    val gridDf = grid.toDF("g", "x")
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("g")
+        .agg(NumOps.exactAvg($"x").as("exact"), NumOps.fixedScaleAvg($"x", 2).as("fixed"))
+        .orderBy("g").collect()
+        .map(r => (r.getInt(0), Seq(1, 2).map(k => Option(r.get(k)).map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])))))
+        .toSeq
+    val whole = bits(gridDf)
+    assert(whole.forall { case (_, Seq(e, f)) => e === f })
+    assert(whole.exists { case (g, vs) => g == 99 && vs.forall(_.isEmpty) })
+    assert(bits(gridDf.repartition(17)) === whole)
   }
 
   private object Tables1 {

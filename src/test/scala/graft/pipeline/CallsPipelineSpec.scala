@@ -2,10 +2,17 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.operators.DimAgg
 
 /** End-to-end pipeline parity on a deterministic calls fixture built to
   * FIXTURES.md §A: duplicate event groups with (a) all-null districts,
@@ -35,6 +42,40 @@ class CallsPipelineSpec extends SparkSpec {
       )
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), CallsPipeline.IngestSchema)
+  }
+
+  /** [[fixture]] plus incidents it lacks: negative, sub-second and
+    * half-way deltas (with losing duplicate rows that carry other
+    * deltas), a three-incident group, and a two-incident group whose
+    * deltas are all null.
+    */
+  private def parityFixture: DataFrame = {
+    def call(event: String, create: String, closed: String, dispatch: String, arrival: String,
+             district: String, beat: String): Row =
+      Row("OAK ST", "CPD", create, "DISPX", event, "T1", "DESC1", "2", "RED", closed, beat, district,
+        null, "CPDN9", "CCN9", "39.20", "-84.60", arrival, dispatch)
+    val d = "2022-03-04T05"
+    val extra = Seq(
+      call("XNEG01", s"$d:10:00.500", s"$d:09:30.000", s"$d:10:07.999", s"$d:09:52.500", "D9", "B90"),
+      call("XNEG01", s"$d:10:00.250", s"$d:59:00.000", s"$d:10:01.000", null, "D9", "B90"),
+      call("XNEG01", s"$d:10:01.000", s"$d:10:02.000", null, null, null, "B90"),
+      call("XNEG02", s"$d:20:00.000", s"$d:20:07.500", s"$d:19:52.500", s"$d:20:00.999", "D9", "B90"),
+      call("XNEG03", s"$d:30:00.001", s"$d:29:59.999", s"$d:30:00.124", s"$d:29:59.000", "D9", "B90"),
+      call("XNULL1", s"$d:40:00.000", null, null, null, "D8", "B91"),
+      call("XNULL2", s"$d:45:00.000", null, null, null, "D8", "B91"),
+      call("XNULL2", s"$d:44:00.000", s"$d:46:00.000", null, null, "D8", "B91")
+    )
+    fixture.union(spark.createDataFrame(spark.sparkContext.parallelize(extra, 2), CallsPipeline.IngestSchema))
+  }
+
+  /** The earlier formulation of [[CallsPipeline.frame]]: derive before
+    * the dedup, then a distinct count and decimal-summed means.
+    */
+  private def referenceFrame(source: DataFrame): DataFrame = {
+    import CallsPipeline._
+    val best = dedupBest(dropSparse(deriveDateParts(deriveTimedeltas(parseTimes(source)))))
+    DimAgg.dimAgg(best, AggDims.map(col), col("event_number"),
+      TimedeltaSpecs.map { case (name, _, _) => s"${name}_mean" -> col(name) })
   }
 
   test("timestamp parse turns *time* columns into timestamps, bad/null → null") {
@@ -78,6 +119,50 @@ class CallsPipelineSpec extends SparkSpec {
     assert(rows > 0 && attempts === 1)
     val reread = spark.read.parquet(out)
     assert(reread.columns.contains("create_closed_timedelta_mean"))
+  }
+
+  test("run's sink equals the derive-first, distinct-count formulation") {
+    val src = parityFixture
+    val out = Files.createTempDirectory("graft-pipeline-parity").resolve("agg").toString
+    val (rows, _) = CallsPipeline.run(src, out)
+    val sink = spark.read.parquet(out)
+    val ref = referenceFrame(src)
+    assert(CallsPipeline.frame(src).schema === ref.schema)
+    assert(sink.schema.map(f => f.name -> f.dataType) === ref.schema.map(f => f.name -> f.dataType))
+    assert(rows === ref.count())
+    assert(sink.exceptAll(ref).isEmpty && ref.exceptAll(sink).isEmpty)
+    // the added incidents reach the sink: negative, sub-second and
+    // all-null means
+    val means = CallsPipeline.TimedeltaSpecs.map { case (name, _, _) => col(s"${name}_mean") }
+    val b90 = sink.filter(col("beat") === "B90").select(col("n_distinct") +: means: _*).head()
+    assert(b90.getLong(0) === 3)
+    assert(b90.getDouble(1) < 0)
+    val b91 = sink.filter(col("beat") === "B91").select(col("n_distinct") +: means: _*).head()
+    assert(b91.getLong(0) === 2 && (1 to 4).forall(b91.isNullAt))
+  }
+
+  test("run is one SQL action; the frame is one two-phase aggregate without distinct or decimal buffers") {
+    val src = parityFixture
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = actions.incrementAndGet()
+    }
+    val out = Files.createTempDirectory("graft-pipeline-actions").resolve("agg").toString
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      CallsPipeline.run(src, out)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(actions.get === 1)
+
+    val plan = CallsPipeline.frame(src).queryExecution.executedPlan
+    val aggs = new AdaptiveSparkPlanHelper {}.collect(plan) { case a: HashAggregateExec => a }
+    assert(aggs.size === 2)
+    assert(!plan.toString.contains("count(distinct"))
+    val buffers = aggs.flatMap(_.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes))
+    assert(!buffers.exists(_.dataType == DecimalType(35, 6)))
   }
 
   test("profiling side-outputs: sparse column at 100%, pivot spans the 3 years") {
