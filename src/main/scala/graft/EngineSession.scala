@@ -12,12 +12,17 @@ import org.apache.spark.sql.SparkSession
   * change. Shuffle partitions default to the local core count here —
   * on a real cluster this would be `max(2 * totalCores, inputBytes /
   * targetPartitionBytes)` or left to AQE coalescing.
+  *
+  * Local `file:` paths go through [[sources.NioLocalFs]], which sets
+  * permissions and reads link status without forking a process.
   */
 object EngineSession {
 
   /** Apply engine defaults to any builder (used by Verify/Bench/tests). */
   def configure(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
+    sources.NioLocalFs.HadoopConf
+      .foldLeft(b) { case (acc, (k, v)) => acc.config(s"spark.hadoop.$k", v) }
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,13 +1,21 @@
 package graft.functions
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+
+import graft.plans.SocrataTimestamp
 
 /** Timestamp parsing, timedelta and calendar-part derivation — the
   * scalar-function surface of the reference (`app.py:275-346`).
   *
-  * All of these are built-in Catalyst expressions (whole-stage
-  * codegen'd); no UDFs, so the hot path at 100 TB stays inside codegen.
+  * No UDFs: everything here compiles into whole-stage codegen. The
+  * timedelta and calendar parts are built-in Catalyst expressions; the
+  * default-format parse is the custom [[SocrataTimestamp]] expression,
+  * a byte-level fast path in front of the built-in `try_to_timestamp`
+  * (see [[parseTimestamp]]). Each derive stage is one projection.
   */
 object TimeOps {
 
@@ -18,15 +26,32 @@ object TimeOps {
     */
   val SocrataFormat = "yyyy-MM-dd'T'HH:mm:ss.SSS"
 
-  def parseTimestamp(c: Column, fmt: String = SocrataFormat): Column =
-    try_to_timestamp(c, lit(fmt))
+  /** `try_to_timestamp(c, fmt)`: its value and its type
+    * (`spark.sql.timestampType`) for every input.
+    *
+    * With the default [[SocrataFormat]] it runs as [[SocrataTimestamp]]:
+    * a string of exactly 23 ASCII bytes `dddd-dd-ddTdd:dd:dd.ddd` with
+    * month 1–12, a day within that month's proleptic-Gregorian length,
+    * hour ≤ 23, minute ≤ 59 and second ≤ 59 is converted by arithmetic,
+    * when the session zone has a fixed offset (the engine's sessions use
+    * UTC) and `spark.sql.legacy.timeParserPolicy` is not `LEGACY`. Every
+    * other input — null, another shape (the strict parser also accepts
+    * 1- and 2-digit fractions), an out-of-range field — and every row
+    * under another zone or policy is answered by `try_to_timestamp`
+    * itself.
+    */
+  def parseTimestamp(c: Column, fmt: String = SocrataFormat): Column = {
+    val strict = try_to_timestamp(c, lit(fmt))
+    if (fmt != SocrataFormat) strict
+    else bridge.column(SocrataTimestamp(bridge.expression(c), bridge.expression(strict)))
+  }
 
   /** Parse every column whose name contains "time" — the reference
     * selects parse targets dynamically by name (`app.py:275-282`).
     */
   def parseTimeColumns(df: DataFrame, fmt: String = SocrataFormat): DataFrame = {
     val targets = df.columns.filter(_.toLowerCase.contains("time"))
-    targets.foldLeft(df)((d, c) => d.withColumn(c, parseTimestamp(col(c), fmt)))
+    df.withColumns(ListMap(targets.toSeq.map(c => c -> parseTimestamp(col(c), fmt)): _*))
   }
 
   /** Decimal places the response-time deltas are rounded to: every
@@ -56,9 +81,15 @@ object TimeOps {
     * per-partition `apply(lambda y: y.year)` loops (`app.py:320-346`) —
     * here single codegen'd expressions.
     */
-  def withDateParts(df: DataFrame, tsCol: String): DataFrame =
-    df.withColumn(s"${tsCol}_year", year(col(tsCol)))
-      .withColumn(s"${tsCol}_month", month(col(tsCol)))
-      .withColumn(s"${tsCol}_day", dayofmonth(col(tsCol)))
-      .withColumn(s"${tsCol}_hour", hour(col(tsCol)))
+  def withDateParts(df: DataFrame, tsCol: String): DataFrame = {
+    val ts = col(tsCol)
+    df.withColumns(
+      ListMap(
+        s"${tsCol}_year" -> year(ts),
+        s"${tsCol}_month" -> month(ts),
+        s"${tsCol}_day" -> dayofmonth(ts),
+        s"${tsCol}_hour" -> hour(ts)
+      )
+    )
+  }
 }

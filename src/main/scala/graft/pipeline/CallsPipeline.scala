@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -68,9 +70,9 @@ object CallsPipeline {
   def parseTimes(df: DataFrame): DataFrame = TimeOps.parseTimeColumns(df)
 
   def deriveTimedeltas(df: DataFrame): DataFrame =
-    TimedeltaSpecs.foldLeft(df) { case (d, (name, t2, t1)) =>
-      d.withColumn(name, TimeOps.timedeltaMinutes(col(t2), col(t1)))
-    }
+    df.withColumns(ListMap(TimedeltaSpecs.map { case (name, t2, t1) =>
+      name -> TimeOps.timedeltaMinutes(col(t2), col(t1))
+    }: _*))
 
   def deriveDateParts(df: DataFrame): DataFrame =
     TimeOps.withDateParts(df, "create_time_incident")

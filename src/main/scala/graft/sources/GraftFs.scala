@@ -20,7 +20,7 @@ object GraftFs {
   private def hadoopConf: Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
+      .getOrElse(NioLocalFs.defaultHadoopConf())
 
   private def fsFor(p: Path): FileSystem = p.getFileSystem(hadoopConf)
 

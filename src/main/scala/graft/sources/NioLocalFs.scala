@@ -1,0 +1,89 @@
+package graft.sources
+
+import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults}
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
+import org.apache.hadoop.fs.permission.FsPermission
+
+/** Hadoop's local `file:` filesystem without a child process per call.
+  *
+  * Without libhadoop (Spark's distribution ships none),
+  * `RawLocalFileSystem.setPermission` runs `chmod` through
+  * `Shell.execCommand` for every file or directory created with a
+  * permission, and `getFileLinkStatus` — which FileContext renames
+  * (Spark's checkpoint file manager) call — runs `readlink`. This
+  * subclass does both through `java.nio`: permissions with
+  * `Files.setPosixFilePermissions` (the sticky bit, which it cannot
+  * express, still goes to `chmod`), and a non-link's link status is its
+  * plain `getFileStatus`, which is what the stock path returns once
+  * `readlink` prints nothing. Real symlinks take the stock path.
+  */
+class NioRawLocalFileSystem extends RawLocalFileSystem {
+
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else Files.setPosixFilePermissions(pathToFile(p).toPath, NioLocalFs.posixPermissions(permission))
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
+}
+
+/** `fs.file.impl`: the checksummed [[LocalFileSystem]] over
+  * [[NioRawLocalFileSystem]] (`FileSystem.getLocal` casts to
+  * `LocalFileSystem`).
+  */
+class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** `fs.AbstractFileSystem.file.impl` (FileContext): Hadoop's
+  * `local.LocalFs` over [[NioRawLocalFs]].
+  */
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(uri, conf))
+
+/** Hadoop's `local.RawLocalFs` over [[NioRawLocalFileSystem]], with its
+  * overrides (its constructors are package-private and fix the
+  * delegate); symlinks delegate to the FileSystem as they do there.
+  */
+class NioRawLocalFs(uri: URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new NioRawLocalFileSystem, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
+}
+
+object NioLocalFs {
+
+  /** The Hadoop settings that select these classes for `file:`. The
+    * FileSystem cache is keyed by scheme, authority and user, not by
+    * configuration, so the first `file:` instance a JVM creates decides:
+    * every Configuration the engine builds carries them.
+    */
+  val HadoopConf: Seq[(String, String)] = Seq(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName
+  )
+
+  /** A default Hadoop Configuration with [[HadoopConf]] set. */
+  def defaultHadoopConf(): Configuration = {
+    val conf = new Configuration()
+    HadoopConf.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  /** The 9 rwx bits of `p` (PosixFilePermission declares them from
+    * owner-read, 0400, down to others-execute, 0001).
+    */
+  private[sources] def posixPermissions(p: FsPermission): java.util.Set[PosixFilePermission] = {
+    val out = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values.zipWithIndex.foreach { case (perm, i) =>
+      if ((p.toShort & (0x100 >> i)) != 0) out.add(perm)
+    }
+    out
+  }
+}

@@ -36,7 +36,7 @@ object ParquetFooters {
   def statsAllColumns(path: String): (Long, Map[String, (Long, Long, Long)]) = {
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+      .getOrElse(NioLocalFs.defaultHadoopConf())
     val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
     try {
       val blocks = {

@@ -61,7 +61,7 @@ object CdfStream {
   private[streaming] def sessionHadoopConf: org.apache.hadoop.conf.Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+      .getOrElse(graft.sources.NioLocalFs.defaultHadoopConf())
 
   def outputSchema(tableSchema: StructType): StructType =
     StructType(

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
@@ -12,6 +13,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.functions.TimeOps
 import graft.operators.DimAgg
 
 /** End-to-end pipeline parity on a deterministic calls fixture built to
@@ -163,6 +165,29 @@ class CallsPipelineSpec extends SparkSpec {
     assert(!plan.toString.contains("count(distinct"))
     val buffers = aggs.flatMap(_.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes))
     assert(!buffers.exists(_.dataType == DecimalType(35, 6)))
+  }
+
+  test("each derive stage is one projection; the frame matches the chained-withColumn formulation") {
+    import CallsPipeline._
+    val src = parityFixture
+    // one withColumn, and one analyzer pass over the growing plan, per column
+    def chained(df: DataFrame): DataFrame = {
+      val parsed = df.columns.filter(_.toLowerCase.contains("time"))
+        .foldLeft(df)((d, c) => d.withColumn(c, TimeOps.parseTimestamp(col(c))))
+      val deltas = TimedeltaSpecs.foldLeft(dedupBest(dropSparse(parsed))) { case (d, (name, t2, t1)) =>
+        d.withColumn(name, TimeOps.timedeltaMinutes(col(t2), col(t1)))
+      }
+      val ts = col("create_time_incident")
+      aggregate(
+        deltas.withColumn("create_time_incident_year", year(ts)).withColumn("create_time_incident_month", month(ts))
+          .withColumn("create_time_incident_day", dayofmonth(ts)).withColumn("create_time_incident_hour", hour(ts))
+      )
+    }
+    val (frame, ref) = (CallsPipeline.frame(src), chained(src))
+    assert(frame.schema === ref.schema)
+    assert(frame.queryExecution.optimizedPlan.sameResult(ref.queryExecution.optimizedPlan))
+    def projects(df: DataFrame) = df.queryExecution.analyzed.collect { case p: Project => p }.size
+    assert(projects(deriveDateParts(deriveTimedeltas(parseTimes(src)))) - projects(src) === 3)
   }
 
   test("profiling side-outputs: sparse column at 100%, pivot spans the 3 years") {
