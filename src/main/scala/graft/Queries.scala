@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.ManifestFixture.{cents, committed, dropMfstTable, insertKeyZones, mfstTable, ordersCents, withCached}
+import graft.ManifestFixture.StagedBatches
 import graft.functions.{NumOps, TextOps, TimeOps, TopKAggregator}
 import graft.operators.{Dedup, DimAgg, Multimodal, NearDup, Ntile, Profiling, Similarity}
 import graft.sources.{DictSource, Fixtures, PagedFetch, Tables, WindowedIngest}
@@ -4436,8 +4438,7 @@ object Queries {
       .select(col("w"), concat(lit("|"), regexp_replace(col("w"), "(.)", "$1|")).as("sym"), col("freq"))
 
   def bpeMergeRounds(s: SparkSession, dir: String): DataFrame = {
-    val words = bpeVocab(s, dir).select("sym", "freq").persist()
-    try {
+    withCached(bpeVocab(s, dir).select("sym", "freq")) { words =>
       var cur = words
       val rounds = (1 to 3).map { r =>
         val best = bpePairCounts(cur).orderBy(desc("pf"), col("a"), col("b")).limit(1).head()
@@ -4453,7 +4454,7 @@ object Queries {
       s.createDataFrame(rounds)
         .toDF("round", "left_sym", "right_sym", "pair_freq", "n_sym_after")
         .orderBy("round")
-    } finally words.unpersist()
+    }
   }
 
   // BPE ENCODE — the apply half of the tokenizer story (q210 trains the
@@ -4469,8 +4470,7 @@ object Queries {
   // 100 TB: identical shape — the learned merge table is tiny and
   // literal, the vocab broadcast, the corpus never pair-shuffled.
   def bpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val vocab = bpeVocab(s, dir).persist()
-    try {
+    withCached(bpeVocab(s, dir)) { vocab =>
       var cur = vocab.select("sym", "freq")
       val merges = (1 to 3).map { _ =>
         val best = bpePairCounts(cur).orderBy(desc("pf"), col("a"), col("b")).limit(1).head()
@@ -4497,7 +4497,7 @@ object Queries {
         )
         .withColumn("chars_per_token_permille", expr("n_chars * 1000 div n_tokens"))
         .orderBy("doc_id")
-    } finally vocab.unpersist()
+    }
   }
 
   // KMV set-intersection estimation between event-type audiences: the
@@ -5732,7 +5732,7 @@ object Queries {
       .select(
         col("o_orderkey").as("k"),
         col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
+        cents
       )
     val snap = orders.filter(col("k") % 10 =!= 0)
     val inserts = orders.filter(col("k") % 10 === 0)
@@ -5788,7 +5788,7 @@ object Queries {
       .select(
         col("o_orderkey").as("k"),
         col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
+        cents
       )
     val snap = orders.filter(col("k") % 10 =!= 0)
     val inserts = orders.filter(col("k") % 10 === 0).withColumn("op", lit("I"))
@@ -5865,62 +5865,59 @@ object Queries {
     val scratch = graft.operators.Scratch.dir("graft-streammerge")
     // r15 (guide §1.2 "don't compute things you throw away"): the 4
     // key-partitioned chunk writes each re-derived the 3-branch op union
-    // from parquet (12 orders scans); persist the projected frame once —
+    // from parquet (12 orders scans); cache the projected frame once —
     // the chunk loop and the snapshot INSERT read the cache, released
     // once the stream completes (the audit rollup rescans, as before)
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-      .persist()
-    val snap = orders.filter(col("k") % 10 =!= 0)
-    val inserts = orders.filter(col("k") % 10 === 0).withColumn("op", lit("I"))
-    val updates = snap
-      .filter(col("k") % 7 === 0)
-      .select(col("k"), col("st"), (col("cents") + 100000L).as("cents"))
-      .withColumn("op", lit("U"))
-    val deletes = snap
-      .filter(col("k") % 13 === 0 && col("k") % 7 =!= 0)
-      .select(col("k"), col("st"), col("cents"))
-      .withColumn("op", lit("D"))
-    val source = inserts.unionByName(updates).unionByName(deletes)
-    // key-partitioned chunks: every key's ops arrive in ONE micro-batch
-    (0 to 3).foreach { i =>
-      source.filter(col("k") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/ops/chunk$i")
-    }
-    snap.createOrReplaceTempView("graft_q383_snap")
-    s.sql("DROP TABLE IF EXISTS graft_scratch.db.cdc_stream_target")
-    s.sql("CREATE TABLE graft_scratch.db.cdc_stream_target (k BIGINT, st STRING, cents BIGINT)")
-    s.sql("INSERT INTO graft_scratch.db.cdc_stream_target SELECT k, st, cents FROM graft_q383_snap")
-    val schema = s.read.parquet(s"$scratch/ops/chunk0").schema
+    val orders = t(s, dir, "orders").select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"), cents)
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(s"$scratch/ops")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          nBatches.incrementAndGet()
-          batch.createOrReplaceTempView("graft_q383_batch")
-          batch.sparkSession.sql("""MERGE INTO graft_scratch.db.cdc_stream_target t
-                                   |USING graft_q383_batch s
-                                   |ON t.k = s.k
-                                   |WHEN MATCHED AND s.op = 'D' THEN DELETE
-                                   |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET cents = s.cents
-                                   |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, st, cents) VALUES (s.k, s.st, s.cents)
-                                   |""".stripMargin)
-          (): Unit
-        }
+    val (updates, deletes) = withCached(orders) { cached =>
+      val snap = cached.filter(col("k") % 10 =!= 0)
+      val inserts = cached.filter(col("k") % 10 === 0).withColumn("op", lit("I"))
+      val updates = snap
+        .filter(col("k") % 7 === 0)
+        .select(col("k"), col("st"), (col("cents") + 100000L).as("cents"))
+        .withColumn("op", lit("U"))
+      val deletes = snap
+        .filter(col("k") % 13 === 0 && col("k") % 7 =!= 0)
+        .select(col("k"), col("st"), col("cents"))
+        .withColumn("op", lit("D"))
+      val source = inserts.unionByName(updates).unionByName(deletes)
+      // key-partitioned chunks: every key's ops arrive in ONE micro-batch
+      (0 to 3).foreach { i =>
+        source.filter(col("k") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/ops/chunk$i")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally { q.stop(); orders.unpersist(); () }
+      snap.createOrReplaceTempView("graft_q383_snap")
+      s.sql("DROP TABLE IF EXISTS graft_scratch.db.cdc_stream_target")
+      s.sql("CREATE TABLE graft_scratch.db.cdc_stream_target (k BIGINT, st STRING, cents BIGINT)")
+      s.sql("INSERT INTO graft_scratch.db.cdc_stream_target SELECT k, st, cents FROM graft_q383_snap")
+      val schema = s.read.parquet(s"$scratch/ops/chunk0").schema
+      val q = s.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(s"$scratch/ops")
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          if (!batch.isEmpty) {
+            nBatches.incrementAndGet()
+            batch.createOrReplaceTempView("graft_q383_batch")
+            batch.sparkSession.sql("""MERGE INTO graft_scratch.db.cdc_stream_target t
+                                     |USING graft_q383_batch s
+                                     |ON t.k = s.k
+                                     |WHEN MATCHED AND s.op = 'D' THEN DELETE
+                                     |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET cents = s.cents
+                                     |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, st, cents) VALUES (s.k, s.st, s.cents)
+                                     |""".stripMargin)
+            (): Unit
+          }
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally q.stop()
+      (updates, deletes)
+    }
     val merged = s.table("graft_scratch.db.cdc_stream_target")
     val direct = orders
       .filter(!(col("k") % 10 =!= 0 && col("k") % 13 === 0 && col("k") % 7 =!= 0))
@@ -5963,7 +5960,7 @@ object Queries {
       .select(
         col("o_orderkey").as("k"),
         col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
+        cents
       )
     orders.createOrReplaceTempView("graft_q391_rows")
     s.sql("DROP TABLE IF EXISTS graft_scratch.db.evolve")
@@ -6144,8 +6141,7 @@ object Queries {
     import graft.functions.VectorOps
     val nlist = 16
     val base = t(s, dir, "embeddings").select(col("vec_id").as("vid"), col("embedding").as("e"))
-    val oldBase = base.filter(col("vid") % 10 =!= 0).persist()
-    try {
+    withCached(base.filter(col("vid") % 10 =!= 0)) { oldBase =>
       val cents = Similarity.trainCentroids(oldBase, nlist, lloydIters = 2)
       val halfNorm = cents.map(c => c.map(x => x * x).reduceLeft(_ + _) / 2.0)
       val scored = cents.indices.map { j =>
@@ -6169,7 +6165,7 @@ object Queries {
           expr("n_new * 1000 div (n_old + n_new)").as("new_share_permille")
         )
         .orderBy("cell")
-    } finally oldBase.unpersist()
+    }
   }
 
   // Rank-biased overlap (RBO@10, p = 0.9) between the IVF and exact
@@ -6554,8 +6550,7 @@ object Queries {
   def clusterSeparation(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorOps
     val nlist = 16
-    val base = t(s, dir, "embeddings").select(col("vec_id").as("vid"), col("embedding").as("e")).persist()
-    try {
+    withCached(t(s, dir, "embeddings").select(col("vec_id").as("vid"), col("embedding").as("e"))) { base =>
       val cents = Similarity.trainCentroids(base, nlist, lloydIters = 2)
       val halfNorm = cents.map(c => c.map(x => x * x).reduceLeft(_ + _) / 2.0)
       val scored = cents.indices.map { j =>
@@ -6580,7 +6575,7 @@ object Queries {
           expr("sum(sep) div count(1)").as("avg_sep_permille")
         )
         .orderBy("cell")
-    } finally base.unpersist()
+    }
   }
 
   // GROUP BY ALL / ORDER BY ALL (Spark 4 SQL sugar, same semantics in
@@ -6804,18 +6799,18 @@ object Queries {
   // data-cardinality.
   def quantileSketch(s: SparkSession, dir: String): DataFrame = {
     val grid = 65536L
-    val cents = t(s, dir, "orders")
-      .select(floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"), col("o_orderkey"), col("o_orderstatus"))
-    val partials = cents.groupBy(col("o_orderstatus"), expr(s"cents div $grid").as("bucket")).count()
+    val priced = t(s, dir, "orders")
+      .select(cents, col("o_orderkey"), col("o_orderstatus"))
+    val partials = priced.groupBy(col("o_orderstatus"), expr(s"cents div $grid").as("bucket")).count()
     val merged = partials.groupBy("bucket").agg(sum(col("count")).as("n"))
-    val direct = cents.groupBy(expr(s"cents div $grid").as("bucket")).agg(count(lit(1)).as("n_direct"))
+    val direct = priced.groupBy(expr(s"cents div $grid").as("bucket")).agg(count(lit(1)).as("n_direct"))
     val mergeOk = merged
       .join(direct, Seq("bucket"), "full")
       .agg(min((coalesce(col("n"), lit(-1L)) === coalesce(col("n_direct"), lit(-2L))).cast("long")).as("merge_ok"))
     val cum = merged
       .withColumn("cum", sum(col("n")).over(Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("cum_before", col("cum") - col("n"))
-    val total = cents.agg(count(lit(1)).as("n_total"))
+    val total = priced.agg(count(lit(1)).as("n_total"))
     val qs = s
       .createDataFrame(Seq(10L, 250L, 500L, 750L, 950L, 990L).map(Tuple1(_)))
       .toDF("q_permille")
@@ -6824,7 +6819,7 @@ object Queries {
     val est = qs
       .join(broadcast(cum), col("cum") >= col("k") && col("cum_before") < col("k"))
       .select(col("q_permille"), col("n_total"), col("k"), (col("bucket") * grid + (grid - 1)).as("est_cents"))
-    val ranked = cents.withColumn("rn", row_number().over(Window.orderBy(col("cents"), col("o_orderkey"))))
+    val ranked = priced.withColumn("rn", row_number().over(Window.orderBy(col("cents"), col("o_orderkey"))))
     est
       .join(ranked.select(col("rn").as("k"), col("cents").as("exact_cents")), Seq("k"))
       .crossJoin(broadcast(mergeOk))
@@ -7753,7 +7748,7 @@ object Queries {
     val o = t(s, dir, "orders").select(
       col("o_orderpriority").as("stratum"),
       substring(col("o_orderpriority"), 1, 1).cast("int").multiply(100).as("rate"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
+      cents,
       col("o_orderkey")
     )
     val truth = o
@@ -7906,13 +7901,14 @@ object Queries {
   def streamDriftMonitor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val scratch = graft.operators.Scratch.dir("graft-driftmon")
-    // chunk source persisted once across the 4 staged writes
-    // (the q383/q310 chunk-staging lesson)
-    val ev = Tables.events(s, dir).persist()
-    (0 to 3).foreach { i =>
-      ev.filter(col("event_id") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/chunk$i")
+    val ev = Tables.events(s, dir)
+    // the 4 staged chunk writes share one cache; the later reference
+    // aggregate rescans
+    withCached(ev) { cached =>
+      (0 to 3).foreach { i =>
+        cached.filter(col("event_id") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/chunk$i")
+      }
     }
-    ev.unpersist() // the later reference aggregate rescans, as before
     val schema = s.read.parquet(s"$scratch/chunk0").schema
     val buf = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
     var batches = 0
@@ -8131,13 +8127,14 @@ object Queries {
   def exactlyOnceSink(s: SparkSession, dir: String): DataFrame = {
     val scratch = graft.operators.Scratch.dir("graft-eos")
     val sink = s"$scratch/sink"
-    // chunk source persisted once across the 4 staged writes
-    // (the q383/q310 chunk-staging lesson)
-    val ev = Tables.events(s, dir).persist()
-    (0 to 3).foreach { i =>
-      ev.filter(col("event_id") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/in/chunk$i")
+    val ev = Tables.events(s, dir)
+    // the 4 staged chunk writes share one cache; the later direct
+    // aggregate rescans
+    withCached(ev) { cached =>
+      (0 to 3).foreach { i =>
+        cached.filter(col("event_id") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/in/chunk$i")
+      }
     }
-    ev.unpersist() // the later direct aggregate rescans, as before
     val schema = s.read.parquet(s"$scratch/in/chunk0").schema
     def runOnce(): Unit = {
       val q = s.readStream
@@ -8559,14 +8556,9 @@ object Queries {
     val scratch = graft.operators.Scratch.dir("graft-ckptresume")
     val ckpt = s"$scratch/ckpt"
     val sink = s"$scratch/out"
-    // r15 (guide §1.2): the four staged chunk writes each rescanned the
-    // events parquet; persist once, the chunk writes read the cache
-    // (released before the audit census, which rescans as before)
-    val ev = Tables.events(s, dir).persist()
-    def writeChunk(i: Int): Unit =
-      ev.filter(col("event_id") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/in/chunk$i"): Unit
-    (0 to 1).foreach(writeChunk)
-    val schema = s.read.parquet(s"$scratch/in/chunk0").schema
+    val ev = Tables.events(s, dir)
+    // read once the first chunks are written
+    lazy val schema = s.read.parquet(s"$scratch/in/chunk0").schema
     // r15: state width rides StateConf like every other stateful stream
     // here (state-store partition count is a start-time decision frozen
     // into the checkpoint; 32 stores per micro-batch for a handful of
@@ -8592,9 +8584,15 @@ object Queries {
       try q.awaitTermination()
       finally q.stop()
     }
-    launch()
-    (2 to 3).foreach(writeChunk) // late-arriving data between launches
-    ev.unpersist()
+    // the four staged chunk writes read one cache, released before the
+    // audit census, which rescans
+    withCached(ev) { cached =>
+      def writeChunk(i: Int): Unit =
+        cached.filter(col("event_id") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/in/chunk$i")
+      (0 to 1).foreach(writeChunk)
+      launch()
+      (2 to 3).foreach(writeChunk) // late-arriving data between launches
+    }
     launch()
     val direct = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_direct"))
     s.read
@@ -9625,12 +9623,6 @@ object Queries {
     // that same write action and folded back as a literal — r13's result
     // and plan depth at half of r13's job count (no separate
     // aggregate-broadcast job per half-round).
-    val edges = graft.operators.CandidateGraph
-      .pairs(s, dir)
-      .select(greatest(col("d1"), col("d2")).as("src"), least(col("d1"), col("d2")).as("dst"))
-      .distinct()
-      .persist()
-    val nodes = edges.select(col("src").as("id")).unionByName(edges.select(col("dst").as("id"))).distinct().persist()
     val One = 1000000000L
     // DECIMAL(38,0) on the product: pre-normalization mass reaches
     // |E|·10⁹, so value·10⁹ would pass 2⁶³ on dense graphs. `tot` is the
@@ -9650,42 +9642,47 @@ object Queries {
     // r14 lesson above.
     val hRounds = new graft.operators.Rounds(s, s"$base/h", parquetEvery = 1)
     val aRounds = new graft.operators.Rounds(s, s"$base/a", parquetEvery = 1)
-    val (aFin, hFin) =
-      try {
-        val nV = nodes.count()
-        require(nV > 0, "HITS over an empty candidate graph")
-        var a = aRounds.next(nodes.select(col("id"), lit(One / nV).as("a")))._1
-        var h: DataFrame = null
-        for (r <- 1 to 8) {
-          val (hRaw, hm) = hRounds.next(
-            edges
-              .join(a.select(col("id").as("dst"), col("a")), Seq("dst"))
-              .groupBy(col("src").as("id"))
-              .agg(sum(col("a")).as("h")),
-            Seq(sum(col("h").cast("decimal(38,0)")).as("tot"))
-          )
-          // null total only on an empty frame (renorm then has no rows to
-          // divide) — guard the literal embed, any non-zero value works
-          h = renorm(hRaw, "h", Option(hm("tot").asInstanceOf[java.math.BigDecimal]).getOrElse(java.math.BigDecimal.ONE))
-          val (aRaw, am) = aRounds.next(
-            edges
-              .join(h.select(col("id").as("src"), col("h")), Seq("src"))
-              .groupBy(col("dst").as("id"))
-              .agg(sum(col("h")).as("a")),
-            Seq(sum(col("a").cast("decimal(38,0)")).as("tot"))
-          )
-          a = renorm(aRaw, "a", Option(am("tot").asInstanceOf[java.math.BigDecimal]).getOrElse(java.math.BigDecimal.ONE))
+    val edgesDf = graft.operators.CandidateGraph
+      .pairs(s, dir)
+      .select(greatest(col("d1"), col("d2")).as("src"), least(col("d1"), col("d2")).as("dst"))
+      .distinct()
+    val (aFin, hFin) = withCached(edgesDf) { edges =>
+      withCached(edges.select(col("src").as("id")).unionByName(edges.select(col("dst").as("id"))).distinct()) { nodes =>
+        try {
+          val nV = nodes.count()
+          require(nV > 0, "HITS over an empty candidate graph")
+          var a = aRounds.next(nodes.select(col("id"), lit(One / nV).as("a")))._1
+          var h: DataFrame = null
+          for (r <- 1 to 8) {
+            val (hRaw, hm) = hRounds.next(
+              edges
+                .join(a.select(col("id").as("dst"), col("a")), Seq("dst"))
+                .groupBy(col("src").as("id"))
+                .agg(sum(col("a")).as("h")),
+              Seq(sum(col("h").cast("decimal(38,0)")).as("tot"))
+            )
+            // null total only on an empty frame (renorm then has no rows to
+            // divide) — guard the literal embed, any non-zero value works
+            h = renorm(hRaw, "h", Option(hm("tot").asInstanceOf[java.math.BigDecimal]).getOrElse(java.math.BigDecimal.ONE))
+            val (aRaw, am) = aRounds.next(
+              edges
+                .join(h.select(col("id").as("src"), col("h")), Seq("src"))
+                .groupBy(col("dst").as("id"))
+                .agg(sum(col("h")).as("a")),
+              Seq(sum(col("a").cast("decimal(38,0)")).as("tot"))
+            )
+            a = renorm(aRaw, "a", Option(am("tot").asInstanceOf[java.math.BigDecimal]).getOrElse(java.math.BigDecimal.ONE))
+          }
+          // final frames to parquet so the returned plan reads plain scans
+          (aRounds.finish(a, "a_final"), hRounds.finish(h, "h_final"))
+        } finally {
+          // every cached round is released before return, also on error
+          // (ADVICE r14: persisted blocks must not leak on throw)
+          aRounds.release()
+          hRounds.release()
         }
-        // final frames to parquet so the returned plan reads plain scans
-        (aRounds.finish(a, "a_final"), hRounds.finish(h, "h_final"))
-      } finally {
-        // every cached round/fixture is released before return, also on
-        // error (ADVICE r14: persisted blocks must not leak on throw)
-        aRounds.release()
-        hRounds.release()
-        edges.unpersist()
-        nodes.unpersist()
       }
+    }
     aFin.join(hFin, Seq("id"), "full")
       .select(
         col("id").as("doc_id"),
@@ -10775,13 +10772,12 @@ object Queries {
     // TWICE (join + union), so an uncut plan doubles per round; the r14
     // never-cut variant (parquetEvery=6 over 4 rounds) regressed ~1.4×
     // on plan/cache-canonicalization growth (VERDICT r14)
-    val edges = pairs
+    val rounds = new graft.operators.Rounds(s, base)
+    val edgesDf = pairs
       .select(col("d1").as("src"), col("d2").as("dst"))
       .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct()
-      .persist()
-    val rounds = new graft.operators.Rounds(s, base)
-    val finalLabels =
+    val finalLabels = withCached(edgesDf) { edges =>
       try {
         var labels = rounds.next(edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")))._1
         for (r <- 1 to 4) {
@@ -10798,10 +10794,8 @@ object Queries {
           labels = if (r == 4) rounds.finish(next, "l_final") else rounds.next(next)._1
         }
         labels
-      } finally {
-        rounds.release()
-        edges.unpersist()
-      }
+      } finally rounds.release()
+    }
     val com = finalLabels.groupBy(col("lbl").as("community")).agg(count(lit(1)).as("n_members"))
     com.persist()
     com
@@ -11725,28 +11719,27 @@ object Queries {
     import s.implicits._
     val sf = graft.sources.GraftFs.baseName(dir)
     val base = s"/tmp/graft_vacuum/$sf"
-    // staging source persisted once across the two slice writes (the
-    // q383/q310 chunk-staging lesson: each write is its own ACTION, so
-    // exchange reuse cannot span them and an uncached base re-scans)
-    val orders = t(s, dir, "orders").persist()
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // g1: the original small-file layout of the < 1998 slice
-    orders
-      .filter(col("o_orderdate") < lit("1998-01-01"))
-      .repartition(8, col("o_orderkey"))
-      .write
-      .mode(ow)
-      .parquet(s"$base/g1")
-    // g2: the nightly compactor rewrites g1 — same rows, 2 files
-    s.read.parquet(s"$base/g1").repartition(2, col("o_orderkey")).write.mode(ow).parquet(s"$base/g2")
-    // g3: the next day's append (the 1998 slice)
-    orders
-      .filter(col("o_orderdate") >= lit("1998-01-01") && col("o_orderdate") < lit("1999-01-01"))
-      .repartition(4, col("o_orderkey"))
-      .write
-      .mode(ow)
-      .parquet(s"$base/g3")
-    orders.unpersist()
+    // cached across the two slice writes: each write is its own ACTION,
+    // so exchange reuse cannot span them and an uncached base re-scans
+    withCached(t(s, dir, "orders")) { orders =>
+      // g1: the original small-file layout of the < 1998 slice
+      orders
+        .filter(col("o_orderdate") < lit("1998-01-01"))
+        .repartition(8, col("o_orderkey"))
+        .write
+        .mode(ow)
+        .parquet(s"$base/g1")
+      // g2: the nightly compactor rewrites g1 — same rows, 2 files
+      s.read.parquet(s"$base/g1").repartition(2, col("o_orderkey")).write.mode(ow).parquet(s"$base/g2")
+      // g3: the next day's append (the 1998 slice)
+      orders
+        .filter(col("o_orderdate") >= lit("1998-01-01") && col("o_orderdate") < lit("1999-01-01"))
+        .repartition(4, col("o_orderkey"))
+        .write
+        .mode(ow)
+        .parquet(s"$base/g3")
+    }
     def inv(g: String): DataFrame = s.read
       .parquet(s"$base/$g")
       .select(lit(g).as("dir"), col("_metadata.file_name").as("file_name"), col("_metadata.file_size").as("file_size"))
@@ -13020,7 +13013,7 @@ object Queries {
       .select(
         col("o_orderkey").as("k"),
         col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
+        cents
       )
     val target0 = orders.filter(col("k") % 10 =!= 0)
     val source = orders
@@ -13105,19 +13098,18 @@ object Queries {
     import s.implicits._
     val sf = graft.sources.GraftFs.baseName(dir)
     val base = s"/tmp/graft_vacuum_expiry/$sf"
-    // staging source persisted once across the two slice writes (the
-    // q383/q310 chunk-staging lesson — cross-action reuse needs a cache)
-    val orders = t(s, dir, "orders").persist()
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    orders
-      .filter(col("o_orderdate") < lit("1998-01-01"))
-      .repartition(8, col("o_orderkey"))
-      .write.mode(ow).parquet(s"$base/g1")
-    orders
-      .filter(col("o_orderdate") >= lit("1998-01-01") && col("o_orderdate") < lit("1999-01-01"))
-      .repartition(4, col("o_orderkey"))
-      .write.mode(ow).parquet(s"$base/g2")
-    orders.unpersist()
+    // cached across the two slice writes: cross-action reuse needs a cache
+    withCached(t(s, dir, "orders")) { orders =>
+      orders
+        .filter(col("o_orderdate") < lit("1998-01-01"))
+        .repartition(8, col("o_orderkey"))
+        .write.mode(ow).parquet(s"$base/g1")
+      orders
+        .filter(col("o_orderdate") >= lit("1998-01-01") && col("o_orderdate") < lit("1999-01-01"))
+        .repartition(4, col("o_orderkey"))
+        .write.mode(ow).parquet(s"$base/g2")
+    }
     // the compactor rewrites g1 (same rows, 2 files) — v3's swap
     s.read.parquet(s"$base/g1").repartition(2, col("o_orderkey")).write.mode(ow).parquet(s"$base/g3")
     def inv(g: String): DataFrame = s.read
@@ -13243,17 +13235,11 @@ object Queries {
         .withColumn(s"y${k + 1}", expr(ny))
         .withColumn("hd", col("hd") + expr(dt))
     }
-    val keyed = cells
-      .select(
-        col("db"),
-        col("pb"),
-        expr("hd div 64").as("hfile"),
-        expr("(db * 64 + pb) div 64").as("linfile")
-      )
-      .persist()
     val inBox = col("db").between(10, 19) && col("pb").between(10, 19)
-    val rowsMatched = keyed.filter(inBox).count()
-    try {
+    withCached(
+      cells.select(col("db"), col("pb"), expr("hd div 64").as("hfile"), expr("(db * 64 + pb) div 64").as("linfile"))
+    ) { keyed =>
+      val rowsMatched = keyed.filter(inBox).count()
       def enact(fileCol: String, name: String): DataFrame = {
         keyed
           .select(col("db"), col("pb"), col(fileCol).as("fcell"))
@@ -13313,7 +13299,7 @@ object Queries {
           )
       }
       enact("hfile", "hilbert").unionByName(enact("linfile", "date_major")).orderBy("layout")
-    } finally keyed.unpersist()
+    }
   }
 
   // Retrain ROLLOUT gate — the verb after q393's recommendation: a
@@ -13415,7 +13401,7 @@ object Queries {
       .select(
         col("o_orderkey").as("k"),
         col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
+        cents
       )
     val target0 = orders.filter(col("k") % 10 =!= 0)
     val source = orders
@@ -13486,25 +13472,11 @@ object Queries {
     import s.implicits._
     val base = graft.operators.Scratch.dir("graft-dv")
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        col("o_orderstatus").as("st"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-    // persisted across the staged write and the two eager-delete
-    // censuses (three separate ACTIONS over the same base projection)
-    orders.persist()
-    orders.repartition(4, col("k")).write.mode(ow).parquet(s"$base/data")
     def scan = s.read
       .parquet(s"$base/data")
       .select(col("k"), col("st"), col("cents"), col("_metadata.file_name").as("f"), col("_metadata.row_index").as("ri"))
     def cohortA(c: Column) = c % 20 === 3
     def cohortB(c: Column) = c % 20 === 7
-    // each DELETE writes positions only — data files are never opened
-    // for write; the spec pins the listing unchanged
-    scan.filter(cohortA(col("k"))).select("f", "ri").coalesce(1).write.mode(ow).parquet(s"$base/dv1")
-    scan.filter(cohortB(col("k"))).select("f", "ri").coalesce(1).write.mode(ow).parquet(s"$base/dv2")
     def dvRead(dvPaths: String*): DataFrame = {
       val tomb = dvPaths.map(s.read.parquet(_)).reduce(_ unionByName _)
       scan.join(broadcast(tomb), Seq("f", "ri"), "left_anti").select("k", "st", "cents")
@@ -13513,9 +13485,21 @@ object Queries {
       val r = df.agg(count(lit(1)), sum(col("k")), sum(col("cents"))).collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    val eager1 = census(orders.filter(!cohortA(col("k"))))
-    val eager2 = census(orders.filter(!cohortA(col("k")) && !cohortB(col("k"))))
-    orders.unpersist()
+    // cached across the staged write and the two eager-delete censuses
+    // (three separate ACTIONS over the same base projection)
+    val (eager1, eager2) =
+      withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"), cents)) {
+        orders =>
+          orders.repartition(4, col("k")).write.mode(ow).parquet(s"$base/data")
+          // each DELETE writes positions only — data files are never opened
+          // for write; the spec pins the listing unchanged
+          scan.filter(cohortA(col("k"))).select("f", "ri").coalesce(1).write.mode(ow).parquet(s"$base/dv1")
+          scan.filter(cohortB(col("k"))).select("f", "ri").coalesce(1).write.mode(ow).parquet(s"$base/dv2")
+          (
+            census(orders.filter(!cohortA(col("k")))),
+            census(orders.filter(!cohortA(col("k")) && !cohortB(col("k"))))
+          )
+      }
     val nA = s.read.parquet(s"$base/dv1").count()
     val nB = s.read.parquet(s"$base/dv2").count()
     val p1 = census(dvRead(s"$base/dv1"))
@@ -13560,26 +13544,22 @@ object Queries {
     import s.implicits._
     val base = graft.operators.Scratch.dir("graft-partevo")
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        col("o_orderstatus").as("st"),
-        year(col("o_orderdate")).as("yr")
-      )
-      // persisted across the two generation writes (separate actions
-      // over the same projection — the chunk-staging lesson)
-      .persist()
-    // g1: the original scheme — partitioned by year only
-    orders
-      .filter(col("yr") < 1998)
-      .repartition(col("yr"))
-      .write.mode(ow).partitionBy("yr").parquet(s"$base/g1")
-    // g2: the evolved scheme — year × status; old files stay put
-    orders
-      .filter(col("yr") >= 1998)
-      .repartition(col("yr"), col("st"))
-      .write.mode(ow).partitionBy("yr", "st").parquet(s"$base/g2")
-    orders.unpersist()
+    // cached across the two generation writes (separate actions over
+    // the same projection)
+    val projected = t(s, dir, "orders")
+      .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"), year(col("o_orderdate")).as("yr"))
+    withCached(projected) { orders =>
+      // g1: the original scheme — partitioned by year only
+      orders
+        .filter(col("yr") < 1998)
+        .repartition(col("yr"))
+        .write.mode(ow).partitionBy("yr").parquet(s"$base/g1")
+      // g2: the evolved scheme — year × status; old files stay put
+      orders
+        .filter(col("yr") >= 1998)
+        .repartition(col("yr"), col("st"))
+        .write.mode(ow).partitionBy("yr", "st").parquet(s"$base/g2")
+    }
     val yearPred = col("yr").between(1996, 1999)
     val fullPred = yearPred && col("st") === "O"
     def audit(gen: String, partitionPred: Column, scheme: String): DataFrame = {
@@ -13622,27 +13602,25 @@ object Queries {
     import s.implicits._
     val base = graft.operators.Scratch.dir("graft-wap")
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once across the three staged writes
-    // (separate actions — the chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))
-      .persist()
-    val main0 = orders.filter(col("k") % 3 === 0)
-    val good = orders.filter(col("k") % 3 === 1)
-    // poisoned: half its rows REUSE main keys, some keys are NULL
-    val poison = orders
-      .filter(col("k") % 3 === 2)
-      .select(
-        when(col("k") % 6 === 2, col("k") + 1) // +1 lands on % 3 == 0: a main key
-          .when(col("k") % 12 === 5, lit(null).cast("long"))
-          .otherwise(col("k"))
-          .as("k"),
-        col("st")
-      )
-    main0.repartition(2, col("k")).write.mode(ow).parquet(s"$base/main")
-    good.repartition(1).write.mode(ow).parquet(s"$base/stage1")
-    poison.repartition(1).write.mode(ow).parquet(s"$base/stage2")
-    orders.unpersist()
+    // the staging source is cached across the three staged writes
+    // (separate actions)
+    withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))) { orders =>
+      val main0 = orders.filter(col("k") % 3 === 0)
+      val good = orders.filter(col("k") % 3 === 1)
+      // poisoned: half its rows REUSE main keys, some keys are NULL
+      val poison = orders
+        .filter(col("k") % 3 === 2)
+        .select(
+          when(col("k") % 6 === 2, col("k") + 1) // +1 lands on % 3 == 0: a main key
+            .when(col("k") % 12 === 5, lit(null).cast("long"))
+            .otherwise(col("k"))
+            .as("k"),
+          col("st")
+        )
+      main0.repartition(2, col("k")).write.mode(ow).parquet(s"$base/main")
+      good.repartition(1).write.mode(ow).parquet(s"$base/stage1")
+      poison.repartition(1).write.mode(ow).parquet(s"$base/stage2")
+    }
     // the manifest IS metadata: a handful of (dir, file) rows per
     // version, held driver-side (a real table format keeps it in a
     // log file) — reads broadcast it, mutations append to it, and no
@@ -13691,12 +13669,10 @@ object Queries {
     // evidence per version: row count, checksum, and the poison census
     // (rows whose key is NULL or collides with main0 — none may ever
     // surface in a published read)
-    def census(v: Int): (Long, Long, Long) = {
-      val rd = readVersion(v).persist()
+    def census(v: Int): (Long, Long, Long) = withCached(readVersion(v)) { rd =>
       val nPoison = rd.filter(col("k").isNull).count() +
         rd.groupBy("k").count().filter(col("count") > 1).count()
       val r = rd.agg(count(lit(1)), sum(col("k"))).collect()(0)
-      rd.unpersist()
       (r.getLong(0), r.getLong(1), nPoison)
     }
     val rows = Seq(
@@ -13772,43 +13748,22 @@ object Queries {
   // parquet files by name.
   def occCommit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, Conflicted, FileRef}
+    import graft.sources.ManifestLog
+    import ManifestLog.{Committed, Conflicted}
     val base = graft.operators.Scratch.dir("graft-occ")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once across the staged batch writes
-    // (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 3).foreach { i =>
-      orders.filter(col("k") % 4 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
+    val stage = StagedBatches(base)
+    import stage.{paths, refs}
+    withCached(ordersCents(s, dir)) { orders =>
+      (0 to 3).foreach(i => stage.write(orders.filter(col("k") % 4 === i), s"b$i"))
+      stage.write(orders.select((col("k") + 10000000L).as("k"), col("cents")), "b4")
     }
-    orders
-      .select((col("k") + 10000000L).as("k"), col("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b4")
-    orders.unpersist()
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Seq[FileRef]): Seq[String] = fs.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 3).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v
-      case other           => sys.error(s"init must commit, got $other")
-    }
+    val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 3).flatMap(i => refs(s"b$i"))))
     // A and C stage their rewrites from the files AS READ at v1 …
     val f01 = refs("b0") ++ refs("b1")
-    s.read.parquet(paths(f01): _*).repartition(1).write.mode(ow).parquet(s"$base/c01")
+    stage.write(s.read.parquet(paths(f01): _*), "c01")
     val fB1 = refs("b1")
-    s.read
-      .parquet(paths(fB1): _*)
-      .filter(col("k") % 8 =!= 1)
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/d1")
+    stage.write(s.read.parquet(paths(fB1): _*).filter(col("k") % 8 =!= 1), "d1")
     // … then the interleave
     val outB = log.tryCommit("main", v1, "append", add = refs("b4"))
     val outA = log.tryCommit("main", v1, "compact", add = refs("c01"), remove = f01)
@@ -14020,8 +13975,7 @@ object Queries {
     zoneFixtureCache.getOrElseUpdate(
       dir, {
         val base = graft.operators.Scratch.pinned("graft-zones")
-        val orders = t(s, dir, "orders")
-          .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+        val orders = ordersCents(s, dir)
         val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
         val w = 1L + maxK / 8L
         (base, writeStattedZones(s, base, orders, w), w)
@@ -14065,49 +14019,31 @@ object Queries {
   }
 
   def changeDataFeed(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.ManifestLog
+    import ManifestLog.FileRef
     val base = graft.operators.Scratch.dir("graft-cdf")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once: the batch writes below each filter
-    // the same projected frame — without the cache every staged batch is
-    // a full base-table scan (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
+    val stage = StagedBatches(base)
+    import stage.refs
     def readRefs(fs: Seq[FileRef], withMeta: Boolean = false): DataFrame =
       manifestReadRefs(s, base, fs, withMeta)
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v
-      case other           => sys.error(s"init must commit, got $other")
-    }
-    // commit 2: append a new batch (keys shifted +10^7)
-    orders
-      .filter(col("k") % 5 === 0)
-      .select((col("k") + 10000000L).as("k"), col("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b3")
-    orders.unpersist() // commits 3/4 derive from the staged files, not the base
-    val v2 = log.tryCommit("main", v1, "append", add = refs("b3")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    // the batch writes each filter the same projected frame — uncached,
+    // every staged batch would be a full base-table scan
+    val v1 = withCached(ordersCents(s, dir)) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      // commit 2: append a new batch (keys shifted +10^7)
+      stage.write(orders.filter(col("k") % 5 === 0).select((col("k") + 10000000L).as("k"), col("cents")), "b3")
+      v1
+    } // commits 3/4 derive from the staged files, not the base
+    val v2 = committed(log.tryCommit("main", v1, "append", add = refs("b3")))
     // commit 3: update-rewrite of b1 (cents+50 for the k%6=1 cohort)
-    readRefs(refs("b1"))
-      .select(col("k"), when(col("k") % 6 === 1, col("cents") + 50L).otherwise(col("cents")).as("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/u1")
-    val v3 = log.tryCommit("main", v2, "rewrite", add = refs("u1"), remove = refs("b1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    stage.write(
+      readRefs(refs("b1"))
+        .select(col("k"), when(col("k") % 6 === 1, col("cents") + 50L).otherwise(col("cents")).as("cents")),
+      "u1"
+    )
+    val v3 = committed(log.tryCommit("main", v2, "rewrite", add = refs("u1"), remove = refs("b1")))
     // commit 4: positional DV delete of the k%15=2 cohort inside b2 —
     // positions only, the data file is never rewritten
     readRefs(refs("b2"), withMeta = true)
@@ -14115,11 +14051,9 @@ object Queries {
       .select("d", "f", "ri")
       .coalesce(1)
       .write
-      .mode(ow)
+      .mode("overwrite")
       .parquet(s"$base/dv1")
-    val v4 = log.tryCommit("main", v3, "delete_dv", dvAdd = refs("dv1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v4 = committed(log.tryCommit("main", v3, "delete_dv", dvAdd = refs("dv1")))
     // ---- read_changes(v1, v4): commit records → change rows, only
     // the named files are ever opened (shared with q414's SCD2).
     // Snapshot the feed to parquet ONCE: the apply/IVM equalities and
@@ -14154,41 +14088,41 @@ object Queries {
       .map(r => r.getString(0) -> Fp(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap
       .withDefaultValue(Fp(0L, 0L, 0L, 0L))
-    // each snapshot feeds BOTH the fingerprint and the IVM check below —
-    // persist so the live-files read + DV anti-join runs once per version,
-    // with the fpOf collect as the materializing action
-    val v1Read = snapshot(v1).persist()
-    val v4Direct = snapshot(v4).persist()
-    val fV1 = fpOf(v1Read)
-    val fV4 = fpOf(v4Direct)
-    val applied = fV1 + feedFps("insert") + feedFps("update_postimage") -
-      feedFps("update_preimage") - feedFps("delete")
-    val eqApply = if (applied == fV4) 1L else 0L
     def multisetEq(a: DataFrame, b: DataFrame): Long =
       if (a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty) 1L else 0L
-    // ---- earned bit 2: the feed maintains a grouped aggregate to
-    // bit-equality with the v4 recompute (q209's IVM merge fed by
-    // THIS feed instead of a handed-in delta batch) ----
     def aggOf(df: DataFrame): DataFrame =
       df.groupBy((col("k") % 10).as("g")).agg(count(lit(1)).as("n"), sum(col("cents")).as("c"))
     val sign = when(col("change_type").isin("insert", "update_postimage"), 1L).otherwise(-1L)
     val deltas = feed
       .groupBy((col("k") % 10).as("g"))
       .agg(sum(sign).as("dn"), sum(sign * col("cents")).as("dc"))
-    val maintained = aggOf(v1Read)
-      .join(deltas, Seq("g"), "full_outer")
-      .select(
-        col("g"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-        (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c")
-      )
-      .filter(col("n") > 0)
-      .persist() // both exceptAll directions read it
-    val v4Agg = aggOf(v4Direct).persist()
-    val eqIvm = multisetEq(maintained, v4Agg)
-    // eqApply/eqIvm are already driver longs; the returned rollup reads
-    // only the feed parquet — release every intermediate now
-    Seq(maintained, v4Agg, v1Read, v4Direct).foreach(_.unpersist())
+    // each snapshot feeds BOTH the fingerprint and the IVM check below,
+    // so its live-files read + DV anti-join runs once per version, with
+    // the fpOf collect as the materializing action; the returned rollup
+    // reads only the feed parquet
+    val (eqApply, eqIvm) = withCached(snapshot(v1)) { v1Read =>
+      withCached(snapshot(v4)) { v4Direct =>
+        val fV1 = fpOf(v1Read)
+        val fV4 = fpOf(v4Direct)
+        val applied = fV1 + feedFps("insert") + feedFps("update_postimage") -
+          feedFps("update_preimage") - feedFps("delete")
+        val eqApply = if (applied == fV4) 1L else 0L
+        // ---- earned bit 2: the feed maintains a grouped aggregate to
+        // bit-equality with the v4 recompute (q209's IVM merge fed by
+        // THIS feed instead of a handed-in delta batch) ----
+        val maintained = aggOf(v1Read)
+          .join(deltas, Seq("g"), "full_outer")
+          .select(
+            col("g"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+            (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c")
+          )
+          .filter(col("n") > 0)
+        // both exceptAll directions read each side
+        val eqIvm = withCached(maintained)(m => withCached(aggOf(v4Direct))(v4Agg => multisetEq(m, v4Agg)))
+        (eqApply, eqIvm)
+      }
+    }
     val out = feed
       .groupBy("version", "change_type")
       .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("key_checksum"), sum(col("cents")).as("cents_checksum"))
@@ -14222,49 +14156,26 @@ object Queries {
   def branchTagRefs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
     val base = graft.operators.Scratch.dir("graft-refs")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once across the staged batch writes
-    // (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders").select(col("o_orderkey").as("k")).persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef]): Seq[String] =
-      fs.toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
+    val stage = StagedBatches(base)
+    import stage.{paths, refs}
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    val v3 = withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"))) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      log.tag("audit-v1", v1)
+      log.createBranch("wap", v1)
+      // staged batch on the wap branch only (keys shifted +10^7)
+      stage.write(orders.filter(col("k") % 7 === 0).select((col("k") + 10000000L).as("k")), "s0")
+      val vStaged = committed(log.tryCommit("wap", v1, "stage", add = refs("s0")))
+      require(vStaged == 2L, s"staged at $vStaged")
+      // main diverges: delete-rewrite of b0 (drops the k%9=0 cohort)
+      stage.write(s.read.parquet(paths(refs("b0")): _*).filter(col("k") % 9 =!= 0), "r0")
+      val v3 = committed(log.tryCommit("main", v1, "delete", add = refs("r0"), remove = refs("b0")))
+      // a failed writer's orphan: on disk, named by no commit
+      stage.write(orders.filter(col("k") % 11 === 0), "o0")
+      v3
     }
-    log.tag("audit-v1", v1)
-    log.createBranch("wap", v1)
-    // staged batch on the wap branch only (keys shifted +10^7)
-    orders
-      .filter(col("k") % 7 === 0)
-      .select((col("k") + 10000000L).as("k"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/s0")
-    log.tryCommit("wap", v1, "stage", add = refs("s0")) match {
-      case Committed(v, _) => require(v == 2L, s"staged at $v"); case o => sys.error(o.toString)
-    }
-    // main diverges: delete-rewrite of b0 (drops the k%9=0 cohort)
-    s.read
-      .parquet(paths(refs("b0")): _*)
-      .filter(col("k") % 9 =!= 0)
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/r0")
-    val v3 = log.tryCommit("main", v1, "delete", add = refs("r0"), remove = refs("b0")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
-    // a failed writer's orphan: on disk, named by no commit
-    orders.filter(col("k") % 11 === 0).repartition(1).write.mode(ow).parquet(s"$base/o0")
-    orders.unpersist()
     def census(v: Long): (Long, Long) = {
       val r = s.read.parquet(paths(log.liveFiles(v)): _*).agg(count(lit(1)), sum(col("k"))).collect()(0)
       (r.getLong(0), r.getLong(1))
@@ -14286,9 +14197,7 @@ object Queries {
     val ffLegal =
       try { log.fastForward("main", "wap"); 1L }
       catch { case _: IllegalArgumentException => 0L }
-    val v4 = log.tryCommit("main", v3, "publish", add = refs("s0")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v4 = committed(log.tryCommit("main", v3, "publish", add = refs("s0")))
     val wapC = census(log.head("wap"))
     val mainC = census(v3)
     val pubC = census(v4)
@@ -14483,58 +14392,33 @@ object Queries {
   // files its version names.
   def restoreVersion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    val base = graft.operators.Scratch.dir("graft-restore")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once across the staged batch writes
-    // (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders").select(col("o_orderkey").as("k")).persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef]): Seq[String] =
-      fs.toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
+    import graft.sources.ManifestLog
+    val stage = StagedBatches(graft.operators.Scratch.dir("graft-restore"))
+    import stage.{paths, refs}
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    val v1 = withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"))) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      // the bad deploy: a poisoned append (keys +10^7, k%13=0 cohort) …
+      stage.write(orders.filter(col("k") % 13 === 0).select((col("k") + 10000000L).as("k")), "b3")
+      v1
     }
-    // the bad deploy: a poisoned append (keys +10^7, k%13=0 cohort) …
-    orders
-      .filter(col("k") % 13 === 0)
-      .select((col("k") + 10000000L).as("k"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b3")
-    orders.unpersist()
-    val v2 = log.tryCommit("main", v1, "append", add = refs("b3")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2 = committed(log.tryCommit("main", v1, "append", add = refs("b3")))
     // … then a wrong delete-rewrite (drops the k%9=1 cohort from b1)
-    s.read
-      .parquet(paths(refs("b1")): _*)
-      .filter(col("k") % 9 =!= 1)
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/u1")
-    val v3 = log.tryCommit("main", v2, "delete", add = refs("u1"), remove = refs("b1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    stage.write(s.read.parquet(paths(refs("b1")): _*).filter(col("k") % 9 =!= 1), "u1")
+    val v3 = committed(log.tryCommit("main", v2, "delete", add = refs("u1"), remove = refs("b1")))
     // RESTORE: one forward commit = the file-set delta head → target
     val target = log.liveFiles(v1)
     val head = log.liveFiles(v3)
-    val v4 = log.tryCommit(
-      "main",
-      v3,
-      "restore",
-      add = (target -- head).toSeq.sortBy(r => (r.dir, r.file)),
-      remove = (head -- target).toSeq.sortBy(r => (r.dir, r.file))
-    ) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v4 = committed(
+      log.tryCommit(
+        "main",
+        v3,
+        "restore",
+        add = (target -- head).toSeq.sortBy(r => (r.dir, r.file)),
+        remove = (head -- target).toSeq.sortBy(r => (r.dir, r.file))
+      )
+    )
     def census(v: Long): (Long, Long) = {
       val r = s.read.parquet(paths(log.liveFiles(v)): _*).agg(count(lit(1)), sum(col("k"))).collect()(0)
       (r.getLong(0), r.getLong(1))
@@ -14571,47 +14455,22 @@ object Queries {
   // arithmetic; no data file is opened.
   def snapshotExpiration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    val base = graft.operators.Scratch.dir("graft-expire")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once across the staged batch writes
-    // (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders").select(col("o_orderkey").as("k")).persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef]): Seq[String] =
-      fs.toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
+    import graft.sources.ManifestLog
+    val stage = StagedBatches(graft.operators.Scratch.dir("graft-expire"))
+    import stage.{paths, refs}
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    val (v1, v2) = withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"))) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      log.tag("audit-q1", v1)
+      // v2: rewrite b0 → r0 (drops the k%9=0 cohort); b0 becomes history
+      stage.write(s.read.parquet(paths(refs("b0")): _*).filter(col("k") % 9 =!= 0), "r0")
+      val v2 = committed(log.tryCommit("main", v1, "delete", add = refs("r0"), remove = refs("b0")))
+      // v3: an append on top
+      stage.write(orders.filter(col("k") % 7 === 0).select((col("k") + 10000000L).as("k")), "b3")
+      (v1, v2)
     }
-    log.tag("audit-q1", v1)
-    // v2: rewrite b0 → r0 (drops the k%9=0 cohort); b0 becomes history
-    s.read
-      .parquet(paths(refs("b0")): _*)
-      .filter(col("k") % 9 =!= 0)
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/r0")
-    val v2 = log.tryCommit("main", v1, "delete", add = refs("r0"), remove = refs("b0")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
-    // v3: an append on top
-    orders
-      .filter(col("k") % 7 === 0)
-      .select((col("k") + 10000000L).as("k"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b3")
-    orders.unpersist()
-    val v3 = log.tryCommit("main", v2, "append", add = refs("b3")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v3 = committed(log.tryCommit("main", v2, "append", add = refs("b3")))
     def census(v: Long): (Long, Long) = {
       val r = s.read.parquet(paths(log.liveFiles(v)): _*).agg(count(lit(1)), sum(col("k"))).collect()(0)
       (r.getLong(0), r.getLong(1))
@@ -14666,35 +14525,27 @@ object Queries {
   // semi-join of fact keys against the dim (dim is dimension-sized).
   def multiTableCommit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    val base = graft.operators.Scratch.dir("graft-txn")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
+    import graft.sources.ManifestLog
+    val stage = StagedBatches(graft.operators.Scratch.dir("graft-txn"))
+    import stage.refs
     // dim = nations (dimension-sized); fact = customers keyed to them
     val nation = t(s, dir, "nation").select(col("n_nationkey").as("nk"), col("n_name").as("nm"))
-    // fact staging persisted across its two slice writes (separate
-    // actions — the chunk-staging lesson; nation is catalog-tiny)
-    val cust = t(s, dir, "customer").select(col("c_custkey").as("ck"), col("c_nationkey").as("nk")).persist()
-    // v1: dims 0..14 and the facts that reference them
-    nation.filter(col("nk") < 15).repartition(1).write.mode(ow).parquet(s"$base/dim/d1")
-    cust.filter(col("nk") < 15).repartition(1).write.mode(ow).parquet(s"$base/fact/f1")
-    // the joint batch: facts referencing NEW dim keys 15..24 + those dims
-    nation.filter(col("nk") >= 15).repartition(1).write.mode(ow).parquet(s"$base/dim/d2")
-    cust.filter(col("nk") >= 15).repartition(1).write.mode(ow).parquet(s"$base/fact/f2")
-    cust.unpersist()
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef], table: String): Seq[String] =
-      fs.toSeq.filter(_.dir.startsWith(table + "/")).sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
+    // fact staging is cached across its two slice writes (separate
+    // actions); nation is catalog-tiny
+    withCached(t(s, dir, "customer").select(col("c_custkey").as("ck"), col("c_nationkey").as("nk"))) { cust =>
+      // v1: dims 0..14 and the facts that reference them
+      stage.write(nation.filter(col("nk") < 15), "dim/d1")
+      stage.write(cust.filter(col("nk") < 15), "fact/f1")
+      // the joint batch: facts referencing NEW dim keys 15..24 + those dims
+      stage.write(nation.filter(col("nk") >= 15), "dim/d2")
+      stage.write(cust.filter(col("nk") >= 15), "fact/f2")
+    }
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = refs("dim/d1") ++ refs("fact/f1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v1 = committed(log.tryCommit("main", 0L, "init", add = refs("dim/d1") ++ refs("fact/f1")))
     // ONE commit, both tables: the atomic boundary
-    val v2 = log.tryCommit("main", v1, "txn_append", add = refs("dim/d2") ++ refs("fact/f2")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2 = committed(log.tryCommit("main", v1, "txn_append", add = refs("dim/d2") ++ refs("fact/f2")))
     def tableAt(v: Long, table: String): DataFrame =
-      s.read.parquet(paths(log.liveFiles(v), table): _*)
+      s.read.parquet(stage.paths(log.liveFiles(v).filter(_.dir.startsWith(table + "/"))): _*)
     def census(v: Long): (Long, Long, Long) = {
       val f = tableAt(v, "fact")
       val d = tableAt(v, "dim")
@@ -14735,30 +14586,23 @@ object Queries {
   def streamingWap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.ManifestLog
     val base = graft.operators.Scratch.dir("graft-swap")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    val ap = org.apache.spark.sql.SaveMode.Append
-    // staging source persisted once across the three batch writes
-    // (separate actions — the chunk-staging lesson)
-    val orders = t(s, dir, "orders").select(col("o_orderkey").as("k")).persist()
-    // three arriving batch files: m0/m1 clean, m2 poisoned with nulls
-    orders.filter(col("k") % 3 === 0).repartition(1).write.mode(ow).parquet(s"$base/in")
-    orders.filter(col("k") % 3 === 1).repartition(1).write.mode(ap).parquet(s"$base/in")
-    orders
-      .filter(col("k") % 3 === 2)
-      .select(when(col("k") % 6 === 2, lit(null).cast("long")).otherwise(col("k")).as("k"))
-      .repartition(1)
-      .write
-      .mode(ap)
-      .parquet(s"$base/in")
-    orders.unpersist()
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init") match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    val stage = StagedBatches(base)
+    withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"))) { orders =>
+      // three arriving batch files: m0/m1 clean, m2 poisoned with nulls
+      stage.write(orders.filter(col("k") % 3 === 0), "in")
+      orders.filter(col("k") % 3 === 1).repartition(1).write.mode("append").parquet(s"$base/in")
+      orders
+        .filter(col("k") % 3 === 2)
+        .select(when(col("k") % 6 === 2, lit(null).cast("long")).otherwise(col("k")).as("k"))
+        .repartition(1)
+        .write
+        .mode("append")
+        .parquet(s"$base/in")
     }
+    val log = new ManifestLog
+    val v1 = committed(log.tryCommit("main", 0L, "init"))
     log.createBranch("wap", v1)
     // (cohort class, n_staged, n_null, published)
     val stats = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long, Long)]()
@@ -14768,15 +14612,11 @@ object Queries {
       val n = agg.getLong(1)
       val nNull = n - agg.getLong(2)
       val stageDir = s"staged/m$cls"
-      batch.repartition(1).write.mode(ow).parquet(s"$base/$stageDir")
-      val staged = refs(stageDir)
-      log.tryCommit("wap", log.head("wap"), "stage", add = staged) match {
-        case Committed(_, _) => (); case o => sys.error(o.toString)
-      }
+      stage.write(batch, stageDir)
+      val staged = stage.refs(stageDir)
+      committed(log.tryCommit("wap", log.head("wap"), "stage", add = staged))
       val pass = nNull == 0L
-      if (pass) log.tryCommit("main", log.head("main"), "publish", add = staged) match {
-        case Committed(_, _) => (); case o => sys.error(o.toString)
-      }
+      if (pass) committed(log.tryCommit("main", log.head("main"), "publish", add = staged))
       stats.add((cls, n, nNull, if (pass) 1L else 0L))
       ()
     }
@@ -14792,8 +14632,7 @@ object Queries {
     try q.awaitTermination()
     finally q.stop()
     // the published read: exactly the clean cohorts, zero poison
-    val mainRead = s.read
-      .parquet(log.liveFiles(log.head("main")).toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}"): _*)
+    val mainRead = s.read.parquet(stage.paths(log.liveFiles(log.head("main"))): _*)
     val fin = mainRead.agg(count(lit(1)), sum(col("k"))).collect()(0)
     val nPoison = mainRead.filter(col("k").isNull || col("k") % 3 === 2).count()
     val perBatch = { import scala.jdk.CollectionConverters._; stats.asScala.toSeq }
@@ -14831,26 +14670,20 @@ object Queries {
   // data-skipping re-expressed over the q404 log.
   def manifestFileSkipping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.ManifestLog
     // eight cluster-key buckets, one file each, zones derived at write
     // time — the SHARED pinned fixture (built once per target dir)
     val (base, statted, w) = sharedZoneFixture(s, dir)
+    val zones = StagedBatches(base)
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v1 = committed(log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap))
     // the scan: a range predicate spanning buckets 0 and 1 only
     val lo = w / 2
     val hi = w + w / 2
     val stats = log.liveStats(v1)
     val kept = stats.filter { case (_, st) => st.max >= lo && st.min <= hi }.keys.toSeq
-    val prunedRead = s.read
-      .parquet(kept.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}"): _*)
-      .filter(col("k").between(lo, hi))
-    val fullRead = s.read
-      .parquet(log.liveFiles(v1).toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}"): _*)
-      .filter(col("k").between(lo, hi))
+    val prunedRead = s.read.parquet(zones.paths(kept): _*).filter(col("k").between(lo, hi))
+    val fullRead = s.read.parquet(zones.paths(log.liveFiles(v1)): _*).filter(col("k").between(lo, hi))
     def census(df: DataFrame): (Long, Long, Long) = {
       val r = df.agg(count(lit(1)), sum(col("k")), sum(col("cents"))).collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -14894,131 +14727,110 @@ object Queries {
   // entire point of maintaining one.
   def scd2FromFeed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.ManifestLog
     val base = graft.operators.Scratch.dir("graft-scd2feed")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once: the batch writes below each filter
-    // the same projected frame — without the cache every staged batch is
-    // a full base-table scan (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
+    val stage = StagedBatches(base)
+    import stage.refs
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    // the batch writes each filter the same projected frame — uncached,
+    // every staged batch would be a full base-table scan
+    val v1 = withCached(ordersCents(s, dir)) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      stage.write(orders.filter(col("k") % 11 === 0).select((col("k") + 10000000L).as("k"), col("cents")), "b3")
+      v1
     }
-    orders
-      .filter(col("k") % 11 === 0)
-      .select((col("k") + 10000000L).as("k"), col("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b3")
-    orders.unpersist()
-    val v2 = log.tryCommit("main", v1, "append", add = refs("b3")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
-    manifestReadRefs(s, base, refs("b1"))
-      .select(col("k"), when(col("k") % 12 === 7, col("cents") + 75L).otherwise(col("cents")).as("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/u1")
-    val v3 = log.tryCommit("main", v2, "rewrite", add = refs("u1"), remove = refs("b1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2 = committed(log.tryCommit("main", v1, "append", add = refs("b3")))
+    stage.write(
+      manifestReadRefs(s, base, refs("b1"))
+        .select(col("k"), when(col("k") % 12 === 7, col("cents") + 75L).otherwise(col("cents")).as("cents")),
+      "u1"
+    )
+    val v3 = committed(log.tryCommit("main", v2, "rewrite", add = refs("u1"), remove = refs("b1")))
     manifestReadRefs(s, base, refs("b2"), withMeta = true)
       .filter(col("k") % 21 === 2)
       .select("d", "f", "ri")
       .coalesce(1)
       .write
-      .mode(ow)
+      .mode("overwrite")
       .parquet(s"$base/dv1")
-    val v4 = log.tryCommit("main", v3, "delete_dv", dvAdd = refs("dv1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    val v4 = committed(log.tryCommit("main", v3, "delete_dv", dvAdd = refs("dv1")))
+    withCached(manifestChanges(s, base, log, v1, v4)) { feed =>
+      // ---- replay the feed onto the SCD2 table ----
+      var scd = manifestSnapshot(s, base, log, v1)
+        .withColumn("start_ver", lit(1L))
+        .withColumn("end_ver", lit(null).cast("long"))
+      // a commit's close set is USUALLY request-sized, but a production
+      // commit can tombstone an unbounded cohort — so the join strategy
+      // goes through the SizeGate discipline (broadcast below the gate,
+      // pinned sort-merge above), not a forced broadcast: the one
+      // join-strategy decision in the lakehouse family now priced the
+      // same way the LM type tables are. The gate's count materializes
+      // `closes` (persisted); the handles release after the lineage cut
+      // below materializes everything.
+      val gated = (2L to 4L).map { v =>
+        val ch = feed.filter(col("version") === v)
+        val closes = ch
+          .filter(col("change_type").isin("update_preimage", "delete"))
+          .select(col("k"), col("cents"), lit(1L).as("close"))
+        val opens = ch
+          .filter(col("change_type").isin("update_postimage", "insert"))
+          .select(col("k"), col("cents"), lit(v).as("start_ver"), lit(null).cast("long").as("end_ver"))
+        val g = graft.operators.SizeGate.countsJoinGated(scd, closes, Seq("k", "cents"), "left")
+        scd = g.joined
+          .withColumn(
+            "end_ver",
+            when(col("close") === 1L && col("end_ver").isNull, lit(v)).otherwise(col("end_ver"))
+          )
+          .drop("close")
+          .unionByName(opens)
+        g
+      }
+      // cut the 3-round join/union lineage ONCE: everything below reads
+      // a flat parquet instead of re-planning the whole replay
+      graft.sinks.RetryingSink.overwriteParquet(scd, s"$base/scd2")
+      gated.foreach(_.release())
+      scd = s.read.parquet(s"$base/scd2")
+      // the dimension serves time travel on its own: the as-of slice at
+      // EVERY version must equal that version's direct manifest read.
+      // Compared as multiset FINGERPRINTS (count, Σk, Σcents,
+      // Σ xxhash64 mod p — the q186 checksum discipline): the SCD2 side
+      // covers all four versions in ONE exploded aggregate (a row is
+      // live in versions start_ver .. end_ver−1, open rows through the
+      // head), the direct side is one single-stage aggregate per
+      // version — against the exceptAll-per-version chain of the first
+      // cut this removed ~10 shuffle jobs (18 s → single-digit).
+      val hmod = xxhash64(col("k"), col("cents")) % 1000000007L
+      def fpRow(r: org.apache.spark.sql.Row) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      val scdFps: Map[Long, (Long, Long, Long, Long)] = scd
+        .select(col("k"), col("cents"), explode(sequence(col("start_ver"), coalesce(col("end_ver") - 1L, lit(4L)))).as("v"))
+        .groupBy("v")
+        .agg(count(lit(1)), sum(col("k")), sum(col("cents")), sum(hmod))
+        .collect()
+        .map(r => r.getLong(0) -> fpRow(r))
+        .toMap
+      def directFp(v: Long): (Long, Long, Long, Long) = {
+        val r = manifestSnapshot(s, base, log, v)
+          .agg(lit(0L), count(lit(1)), sum(col("k")), sum(col("cents")), sum(hmod))
+          .collect()(0)
+        fpRow(r)
+      }
+      val directFps = (1L to 4L).map(v => v -> directFp(v)).toMap
+      val eqAsof = if ((1L to 4L).forall(v => scdFps(v) == directFps(v))) 1L else 0L
+      val eqCurrent = if (scdFps(4L) == directFps(4L)) 1L else 0L
+      val changesByV: Map[Long, Long] =
+        feed.groupBy("version").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // closed census: one small aggregate on end_ver, cumulated driver-side
+      val closedAt: Map[Long, Long] =
+        scd.filter(col("end_ver").isNotNull).groupBy("end_ver").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val counts = (2L to 4L).map { v =>
+        (v, changesByV.getOrElse(v, 0L), scdFps(v)._1, (2L to v).map(closedAt.getOrElse(_, 0L)).sum)
+      }
+      counts
+        .map { case (v, nCh, nOpen, nClosed) => (v, nCh, nOpen, nClosed, eqCurrent, eqAsof) }
+        .toDF("version", "n_changes", "n_open_after", "n_closed_after", "eq_current", "eq_asof")
+        .orderBy("version")
     }
-    val feed = manifestChanges(s, base, log, v1, v4).persist()
-    // ---- replay the feed onto the SCD2 table ----
-    var scd = manifestSnapshot(s, base, log, v1)
-      .withColumn("start_ver", lit(1L))
-      .withColumn("end_ver", lit(null).cast("long"))
-    // a commit's close set is USUALLY request-sized, but a production
-    // commit can tombstone an unbounded cohort — so the join strategy
-    // goes through the SizeGate discipline (broadcast below the gate,
-    // pinned sort-merge above), not a forced broadcast: the one
-    // join-strategy decision in the lakehouse family now priced the
-    // same way the LM type tables are. The gate's count materializes
-    // `closes` (persisted); the handles release after the lineage cut
-    // below materializes everything.
-    val gated = (2L to 4L).map { v =>
-      val ch = feed.filter(col("version") === v)
-      val closes = ch
-        .filter(col("change_type").isin("update_preimage", "delete"))
-        .select(col("k"), col("cents"), lit(1L).as("close"))
-      val opens = ch
-        .filter(col("change_type").isin("update_postimage", "insert"))
-        .select(col("k"), col("cents"), lit(v).as("start_ver"), lit(null).cast("long").as("end_ver"))
-      val g = graft.operators.SizeGate.countsJoinGated(scd, closes, Seq("k", "cents"), "left")
-      scd = g.joined
-        .withColumn(
-          "end_ver",
-          when(col("close") === 1L && col("end_ver").isNull, lit(v)).otherwise(col("end_ver"))
-        )
-        .drop("close")
-        .unionByName(opens)
-      g
-    }
-    // cut the 3-round join/union lineage ONCE: everything below reads
-    // a flat parquet instead of re-planning the whole replay
-    graft.sinks.RetryingSink.overwriteParquet(scd, s"$base/scd2")
-    gated.foreach(_.release())
-    scd = s.read.parquet(s"$base/scd2")
-    // the dimension serves time travel on its own: the as-of slice at
-    // EVERY version must equal that version's direct manifest read.
-    // Compared as multiset FINGERPRINTS (count, Σk, Σcents,
-    // Σ xxhash64 mod p — the q186 checksum discipline): the SCD2 side
-    // covers all four versions in ONE exploded aggregate (a row is
-    // live in versions start_ver .. end_ver−1, open rows through the
-    // head), the direct side is one single-stage aggregate per
-    // version — against the exceptAll-per-version chain of the first
-    // cut this removed ~10 shuffle jobs (18 s → single-digit).
-    val hmod = xxhash64(col("k"), col("cents")) % 1000000007L
-    def fpRow(r: org.apache.spark.sql.Row) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    val scdFps: Map[Long, (Long, Long, Long, Long)] = scd
-      .select(col("k"), col("cents"), explode(sequence(col("start_ver"), coalesce(col("end_ver") - 1L, lit(4L)))).as("v"))
-      .groupBy("v")
-      .agg(count(lit(1)), sum(col("k")), sum(col("cents")), sum(hmod))
-      .collect()
-      .map(r => r.getLong(0) -> fpRow(r))
-      .toMap
-    def directFp(v: Long): (Long, Long, Long, Long) = {
-      val r = manifestSnapshot(s, base, log, v)
-        .agg(lit(0L), count(lit(1)), sum(col("k")), sum(col("cents")), sum(hmod))
-        .collect()(0)
-      fpRow(r)
-    }
-    val directFps = (1L to 4L).map(v => v -> directFp(v)).toMap
-    val eqAsof = if ((1L to 4L).forall(v => scdFps(v) == directFps(v))) 1L else 0L
-    val eqCurrent = if (scdFps(4L) == directFps(4L)) 1L else 0L
-    val changesByV: Map[Long, Long] =
-      feed.groupBy("version").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // closed census: one small aggregate on end_ver, cumulated driver-side
-    val closedAt: Map[Long, Long] =
-      scd.filter(col("end_ver").isNotNull).groupBy("end_ver").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val counts = (2L to 4L).map { v =>
-      (v, changesByV.getOrElse(v, 0L), scdFps(v)._1, (2L to v).map(closedAt.getOrElse(_, 0L)).sum)
-    }
-    val out = counts
-      .map { case (v, nCh, nOpen, nClosed) => (v, nCh, nOpen, nClosed, eqCurrent, eqAsof) }
-      .toDF("version", "n_changes", "n_open_after", "n_closed_after", "eq_current", "eq_asof")
-      .orderBy("version")
-    feed.unpersist()
-    out
   }
 
   // SQL TIME TRAVEL THROUGH THE V2 CATALOG — `VERSION AS OF` as the
@@ -15044,15 +14856,13 @@ object Queries {
     s.conf.set("spark.sql.catalog.graft_scratch", classOf[graft.sources.ScratchCatalog].getName)
     s.sql("DROP TABLE IF EXISTS graft_scratch.db.q415tt")
     s.sql("CREATE TABLE graft_scratch.db.q415tt (k BIGINT, cents BIGINT)")
-    // staging source persisted once across the two INSERT actions (the
-    // temp view resolves to the cached plan — the chunk-staging lesson)
-    val q415Src = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    q415Src.createOrReplaceTempView("q415_src")
-    s.sql("INSERT INTO graft_scratch.db.q415tt SELECT k, cents FROM q415_src WHERE k % 2 = 0")
-    s.sql("INSERT INTO graft_scratch.db.q415tt SELECT k, cents FROM q415_src WHERE k % 2 = 1")
-    q415Src.unpersist()
+    // the temp view resolves to the cached plan, so the two INSERT
+    // actions scan orders once
+    withCached(ordersCents(s, dir)) { q415Src =>
+      q415Src.createOrReplaceTempView("q415_src")
+      s.sql("INSERT INTO graft_scratch.db.q415tt SELECT k, cents FROM q415_src WHERE k % 2 = 0")
+      s.sql("INSERT INTO graft_scratch.db.q415tt SELECT k, cents FROM q415_src WHERE k % 2 = 1")
+    }
     s.sql("UPDATE graft_scratch.db.q415tt SET cents = cents + 100 WHERE k % 5 = 0")
     s.sql("DELETE FROM graft_scratch.db.q415tt WHERE k % 7 = 0")
     def census(q: String): (Long, Long, Long) = {
@@ -15113,20 +14923,17 @@ object Queries {
   // correctness costs.
   def metadataOnlyAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
+    import graft.sources.ManifestLog
+    import ManifestLog.FileRef
     // the shared pinned zone fixture; this query's private DV dirs
     // (q416dv1/q416dv2) land under the same base with query-unique
     // names, deterministically overwritten per run
     val (base, statted, w) = sharedZoneFixture(s, dir)
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
+    val zones = StagedBatches(base)
+    import zones.refs
     def newLog(): (ManifestLog, Long) = {
       val log = new ManifestLog
-      val v = log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap) match {
-        case Committed(v0, _) => v0; case o => sys.error(o.toString)
-      }
-      (log, v)
+      (log, committed(log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap)))
     }
     val (log, v1) = newLog()
     // full (min/max/count) eligibility: every live file statted, no DV
@@ -15163,7 +14970,7 @@ object Queries {
       val tomb = manifestReadRefs(s, base, lg.liveFiles(v).toSeq, withMeta = true)
         .filter(col("k") % 10 === rem)
         .select("d", "f", "ri")
-      tomb.coalesce(1).write.mode(ow).parquet(s"$base/$dvDir")
+      tomb.coalesce(1).write.mode("overwrite").parquet(s"$base/$dvDir")
       s.read
         .parquet(s"$base/$dvDir")
         .groupBy("d", "f")
@@ -15180,9 +14987,7 @@ object Queries {
     // phase 2: a LEGACY DV lands (no cardinality recorded) — the
     // whole metadata path is ineligible, count included
     stageDv(log, v1, 3, "q416dv1")
-    val v2 = log.tryCommit("main", v1, "delete_dv", dvAdd = refs("q416dv1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2 = committed(log.tryCommit("main", v1, "delete_dv", dvAdd = refs("q416dv1")))
     val elig2 = if (eligible(log, v2)) 1L else 0L
     val eligc2 = if (countEligible(log, v2)) 1L else 0L
     val scan2 = scanAnswer(log, v2)
@@ -15191,9 +14996,7 @@ object Queries {
     // same files — dvRows recorded, so COUNT(*) stays log arithmetic
     val (log2, v1b) = newLog()
     val dvRows3 = stageDv(log2, v1b, 7, "q416dv2")
-    val v2b = log2.tryCommit("main", v1b, "delete_dv", dvAdd = refs("q416dv2"), dvRows = dvRows3) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2b = committed(log2.tryCommit("main", v1b, "delete_dv", dvAdd = refs("q416dv2"), dvRows = dvRows3))
     val elig3 = if (eligible(log2, v2b)) 1L else 0L
     val eligc3 = if (countEligible(log2, v2b)) 1L else 0L
     val scan3 = scanAnswer(log2, v2b)
@@ -15233,43 +15036,40 @@ object Queries {
   // cluster-by-key layout, closing advisor → layout → scan-planner.
   def manifestJoinPruning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.ManifestLog
+    import ManifestLog.FileRef
     // the shared pinned zone fixture (read-only here)
     val (base, statted, _) = sharedZoneFixture(s, dir)
+    val zones = StagedBatches(base)
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v1 = committed(log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap))
     // the build side: one ship-month's order keys (dim-sized)
-    val build = t(s, dir, "lineitem")
+    val buildSide = t(s, dir, "lineitem")
       .filter(col("l_shipdate").between(lit("1996-03-01"), lit("1996-03-31")))
       .select(col("l_orderkey").as("k"))
       .distinct()
-      .persist()
-    // dim-cardinality, the DPP build-side collect — SORTED so each
-    // file's zone test is a binary search (O(|files|·log|keys|)), not
-    // a linear probe: the r11 verdict's ask before this pattern lifts
-    // into a DSv2 scan planner where |files| is 100 TB-sized
-    val buildKeys = build.collect().map(_.getLong(0)).sorted
-    def anyKeyInZone(mn: Long, mx: Long): Boolean = {
-      val i = java.util.Arrays.binarySearch(buildKeys, mn)
-      val p = if (i >= 0) i else -i - 1 // first key >= mn
-      p < buildKeys.length && buildKeys(p) <= mx
-    }
     val stats = log.liveStats(v1)
-    val kept = stats.filter { case (_, st) => anyKeyInZone(st.min, st.max) }.keys.toSeq
-    def joined(files: Seq[FileRef]): DataFrame =
-      s.read
-        .parquet(files.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}"): _*)
-        .join(broadcast(build), Seq("k"), "left_semi")
-    def census(df: DataFrame): (Long, Long, Long) = {
-      val r = df.agg(count(lit(1)), sum(col("k")), sum(col("cents"))).collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2))
+    val (kept, pruned, eqFull) = withCached(buildSide) { build =>
+      // dim-cardinality, the DPP build-side collect — SORTED so each
+      // file's zone test is a binary search (O(|files|·log|keys|)), not
+      // a linear probe: the r11 verdict's ask before this pattern lifts
+      // into a DSv2 scan planner where |files| is 100 TB-sized
+      val buildKeys = build.collect().map(_.getLong(0)).sorted
+      def anyKeyInZone(mn: Long, mx: Long): Boolean = {
+        val i = java.util.Arrays.binarySearch(buildKeys, mn)
+        val p = if (i >= 0) i else -i - 1 // first key >= mn
+        p < buildKeys.length && buildKeys(p) <= mx
+      }
+      val kept = stats.filter { case (_, st) => anyKeyInZone(st.min, st.max) }.keys.toSeq
+      def joined(files: Seq[FileRef]): DataFrame =
+        s.read.parquet(zones.paths(files): _*).join(broadcast(build), Seq("k"), "left_semi")
+      def census(df: DataFrame): (Long, Long, Long) = {
+        val r = df.agg(count(lit(1)), sum(col("k")), sum(col("cents"))).collect()(0)
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      }
+      val pruned = census(joined(kept))
+      (kept, pruned, if (pruned == census(joined(log.liveFiles(v1).toSeq))) 1L else 0L)
     }
-    val pruned = census(joined(kept))
-    val eqFull = if (pruned == census(joined(log.liveFiles(v1).toSeq))) 1L else 0L
-    build.unpersist()
     Seq(
       ("dpp_scan", log.liveFiles(v1).size.toLong, kept.size.toLong, pruned._1, pruned._2, pruned._3, eqFull)
     ).toDF("scan", "n_files_total", "n_files_scanned", "n_rows", "key_checksum", "cents_checksum", "eq_full")
@@ -15292,63 +15092,42 @@ object Queries {
   def streamingCdfIvm(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.ManifestLog
     val base = graft.operators.Scratch.dir("graft-cdfstream")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    val ap = org.apache.spark.sql.SaveMode.Append
-    // staging source persisted once: the batch writes below each filter
-    // the same projected frame — without the cache every staged batch is
-    // a full base-table scan (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
+    val stage = StagedBatches(base)
+    import stage.refs
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    // the batch writes each filter the same projected frame — uncached,
+    // every staged batch would be a full base-table scan
+    val v1 = withCached(ordersCents(s, dir)) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      // three commits land (append / update-rewrite / DV delete) …
+      stage.write(orders.filter(col("k") % 4 === 0).select((col("k") + 10000000L).as("k"), col("cents")), "b3")
+      v1
     }
-    // three commits land (append / update-rewrite / DV delete) …
-    orders
-      .filter(col("k") % 4 === 0)
-      .select((col("k") + 10000000L).as("k"), col("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b3")
-    orders.unpersist()
-    val v2 = log.tryCommit("main", v1, "append", add = refs("b3")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
-    manifestReadRefs(s, base, refs("b1"))
-      .select(col("k"), when(col("k") % 9 === 4, col("cents") + 30L).otherwise(col("cents")).as("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/u1")
-    val v3 = log.tryCommit("main", v2, "rewrite", add = refs("u1"), remove = refs("b1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2 = committed(log.tryCommit("main", v1, "append", add = refs("b3")))
+    stage.write(
+      manifestReadRefs(s, base, refs("b1"))
+        .select(col("k"), when(col("k") % 9 === 4, col("cents") + 30L).otherwise(col("cents")).as("cents")),
+      "u1"
+    )
+    val v3 = committed(log.tryCommit("main", v2, "rewrite", add = refs("u1"), remove = refs("b1")))
     manifestReadRefs(s, base, refs("b2"), withMeta = true)
       .filter(col("k") % 18 === 2)
       .select("d", "f", "ri")
       .coalesce(1)
       .write
-      .mode(ow)
+      .mode("overwrite")
       .parquet(s"$base/dv1")
-    val v4 = log.tryCommit("main", v3, "delete_dv", dvAdd = refs("dv1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v4 = committed(log.tryCommit("main", v3, "delete_dv", dvAdd = refs("dv1")))
     // … and the feed is PUBLISHED per commit: one file per version,
     // the stream a downstream consumer tails
     log.commitsBetween(v1, v4).foreach { c =>
       manifestChanges(s, base, log, c.parent, c.version)
         .repartition(1)
         .write
-        .mode(ap)
+        .mode("append")
         .parquet(s"$base/feedstream")
     }
     // the maintained view: group → (n, cents_sum), merged additively
@@ -15428,37 +15207,22 @@ object Queries {
   // deployment gets from its log store's conditional PUT.
   def occConcurrency(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, Conflicted, FileRef}
-    val base = graft.operators.Scratch.dir("graft-occ2")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once: the batch writes below each filter
-    // the same projected frame — without the cache every staged batch is
-    // a full base-table scan (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 2).foreach { i =>
-      orders.filter(col("k") % 3 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
-    }
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef]): Seq[String] =
-      fs.toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
+    import graft.sources.ManifestLog
+    import ManifestLog.{Committed, Conflicted}
+    val stage = StagedBatches(graft.operators.Scratch.dir("graft-occ2"))
+    import stage.{paths, refs}
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
+    // the batch writes each filter the same projected frame — uncached,
+    // every staged batch would be a full base-table scan
+    val v1 = withCached(ordersCents(s, dir)) { orders =>
+      (0 to 2).foreach(i => stage.write(orders.filter(col("k") % 3 === i), s"b$i"))
+      val v1 = committed(log.tryCommit("main", 0L, "init", add = (0 to 2).flatMap(i => refs(s"b$i"))))
+      // ---- race 1: append vs compact, both staged before either commits
+      stage.write(orders.filter(col("k") % 5 === 0).select((col("k") + 10000000L).as("k"), col("cents")), "b3")
+      v1
     }
-    // ---- race 1: append vs compact, both staged before either commits
-    orders
-      .filter(col("k") % 5 === 0)
-      .select((col("k") + 10000000L).as("k"), col("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b3")
-    orders.unpersist()
     val f01 = refs("b0") ++ refs("b1")
-    s.read.parquet(paths(f01): _*).repartition(1).write.mode(ow).parquet(s"$base/c01")
+    stage.write(s.read.parquet(paths(f01): _*), "c01")
     val outcomes1 = new java.util.concurrent.ConcurrentLinkedQueue[ManifestLog.Outcome]()
     val race1 = Seq(
       new Thread(() => { outcomes1.add(log.tryCommit("main", v1, "append", add = refs("b3"))); () }),
@@ -15470,8 +15234,8 @@ object Queries {
     val committed1 = o1.count(_.isInstanceOf[Committed]).toLong
     // ---- race 2: two identical delete-rewrites of b2 (a retry storm)
     val f2 = refs("b2")
-    s.read.parquet(paths(f2): _*).filter(col("k") % 6 =!= 2).repartition(1).write.mode(ow).parquet(s"$base/d2a")
-    s.read.parquet(paths(f2): _*).filter(col("k") % 6 =!= 2).repartition(1).write.mode(ow).parquet(s"$base/d2b")
+    stage.write(s.read.parquet(paths(f2): _*).filter(col("k") % 6 =!= 2), "d2a")
+    stage.write(s.read.parquet(paths(f2): _*).filter(col("k") % 6 =!= 2), "d2b")
     val readV = log.head()
     val outcomes2 = new java.util.concurrent.ConcurrentLinkedQueue[ManifestLog.Outcome]()
     val race2 = Seq(
@@ -15527,19 +15291,15 @@ object Queries {
   // reads each input group once; stats cost nothing.
   def manifestCompaction(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef, FileStats}
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
+    import graft.sources.ManifestLog
+    import ManifestLog.{FileRef, FileStats}
     // the shared pinned zone fixture; this query's compaction outputs
     // (q416c$g) land under the same base with query-unique names
     val (base, statted, _) = sharedZoneFixture(s, dir)
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef]): Seq[String] =
-      fs.toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
+    val zones = StagedBatches(base)
+    import zones.{paths, refs}
     val log = new ManifestLog
-    val v1 = log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v1 = committed(log.tryCommit("main", 0L, "init", add = statted.map(_._1), stats = statted.toMap))
     // plan FROM THE LOG: zone order from the stats, fold 3 zones per
     // output file — |live files| driver arithmetic, zero file opens
     val plan: Seq[(Long, Seq[(FileRef, FileStats)])] = log
@@ -15558,18 +15318,10 @@ object Queries {
         inputs.map(_._2.max).max,
         inputs.map(_._2.rows).sum
       )
-      s.read.parquet(paths(inputs.map(_._1)): _*).repartition(1).write.mode(ow).parquet(s"$base/q420c$g")
+      zones.write(s.read.parquet(paths(inputs.map(_._1)): _*), s"q420c$g")
       val out = refs(s"q420c$g")
-      log.tryCommit(
-        "main",
-        log.head(),
-        "compact",
-        add = out,
-        remove = inputs.map(_._1),
-        stats = out.map(_ -> derived).toMap
-      ) match {
-        case Committed(_, _) => (); case o => sys.error(o.toString)
-      }
+      val stats = out.map(_ -> derived).toMap
+      committed(log.tryCommit("main", log.head(), "compact", add = out, remove = inputs.map(_._1), stats = stats))
       // verification scan of the NEW file: derived stats must be exact
       val mm = s.read.parquet(paths(out): _*).agg(min(col("k")), max(col("k")), count(lit(1))).collect()(0)
       val eqStats = if (FileStats(mm.getLong(0), mm.getLong(1), mm.getLong(2)) == derived) 1L else 0L
@@ -15615,46 +15367,24 @@ object Queries {
   def durableLog(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.{DurableManifestLog, GraftFs, ManifestLog}
-    import ManifestLog.{Committed, Conflicted, FileRef}
+    import ManifestLog.{Committed, Conflicted}
     val base = graft.operators.Scratch.dir("graft-dlog-q")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    // staging source persisted once across the staged batch writes
-    // (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 3).foreach { i =>
-      orders.filter(col("k") % 4 === i).repartition(1).write.mode(ow).parquet(s"$base/b$i")
+    val stage = StagedBatches(base)
+    import stage.{paths, refs}
+    withCached(ordersCents(s, dir)) { orders =>
+      (0 to 3).foreach(i => stage.write(orders.filter(col("k") % 4 === i), s"b$i"))
+      stage.write(orders.select((col("k") + 10000000L).as("k"), col("cents")), "b4")
     }
-    orders
-      .select((col("k") + 10000000L).as("k"), col("cents"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/b4")
-    orders.unpersist()
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
-    def paths(fs: Iterable[FileRef]): Seq[String] =
-      fs.toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$base/${r.dir}/${r.file}")
     val logA = DurableManifestLog.open(base)
-    val v1 = logA.tryCommit("main", 0L, "init", add = (0 to 3).flatMap(i => refs(s"b$i"))) match {
-      case Committed(v, _) => v
-      case other           => sys.error(s"init must commit, got $other")
-    }
+    val v1 = committed(logA.tryCommit("main", 0L, "init", add = (0 to 3).flatMap(i => refs(s"b$i"))))
     // a second instance opens the SAME directory — fresh replay,
     // nothing shared in memory with A
     val logB = DurableManifestLog.open(base)
     // A and B stage their rewrites from the files AS READ at v1 …
     val f01 = refs("b0") ++ refs("b1")
-    s.read.parquet(paths(f01): _*).repartition(1).write.mode(ow).parquet(s"$base/c01")
+    stage.write(s.read.parquet(paths(f01): _*), "c01")
     val fB1 = refs("b1")
-    s.read
-      .parquet(paths(fB1): _*)
-      .filter(col("k") % 8 =!= 1)
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/d1")
+    stage.write(s.read.parquet(paths(fB1): _*).filter(col("k") % 8 =!= 1), "d1")
     // … then the cross-instance interleave
     val outB = logB.tryCommit("main", v1, "append", add = refs("b4"))
     val outA = logA.tryCommit("main", v1, "compact", add = refs("c01"), remove = f01)
@@ -15736,12 +15466,8 @@ object Queries {
   // parquet scan/write.
   def manifestCatalogSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q422t")
-    s.sql("CREATE TABLE graft_mfst.db.q422t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q422_src")
+    val tdir = mfstTable(s, "q422t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q422_src")
     s.sql("INSERT INTO graft_mfst.db.q422t SELECT k, cents FROM q422_src WHERE k % 2 = 0") // v1
     s.sql("INSERT INTO graft_mfst.db.q422t SELECT k, cents FROM q422_src WHERE k % 2 = 1") // v2
     def census(q: String): (Long, Long, Long) = {
@@ -15761,13 +15487,8 @@ object Queries {
       catch { case _: Exception => 1L }
     // the cross-process read: a FRESH log instance over the table dir
     // (disk replay only) must name the same live bytes SQL serves
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q422t"
     val other = graft.sources.DurableManifestLog.open(tdir)
-    val directPaths = other
-      .liveFiles(other.head())
-      .toSeq
-      .sortBy(r => (r.dir, r.file))
-      .map(r => s"$tdir/${r.dir}/${r.file}")
+    val directPaths = StagedBatches(tdir).paths(other.liveFiles(other.head()))
     val direct = s.read.parquet(directPaths: _*).agg(count(lit(1)), sum(col("k")), sum(col("cents"))).collect()(0)
     val eqDirect =
       if ((direct.getLong(0), direct.getLong(1), direct.getLong(2)) == asOf(2L)) 1L else 0L
@@ -15804,23 +15525,8 @@ object Queries {
   // over-read, never wrong-answer.
   def manifestScanPruning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q423t")
-    s.sql("CREATE TABLE graft_mfst.db.q423t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-    // persisted once: the maxK agg materializes the cache; the 8 INSERTs
-    // below re-read it instead of re-scanning the base table
-    orders.persist().createOrReplaceTempView("q423_src")
-    val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
-    val w = 1L + maxK / 8L
-    (0 until 8).foreach { i =>
-      s.sql(
-        s"INSERT INTO graft_mfst.db.q423t SELECT /*+ COALESCE(1) */ k, cents FROM q423_src " +
-          s"WHERE k >= ${i * w} AND k < ${(i + 1) * w}"
-      )
-    }
-    orders.unpersist()
+    val tdir = mfstTable(s, "q423t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    val w = insertKeyZones(s, "q423t", ordersCents(s, dir), "k, cents")
     val lo = w / 2
     val hi = w + w / 2
     val df = s.sql(
@@ -15831,13 +15537,8 @@ object Queries {
     val scanned =
       org.apache.spark.sql.graft.manifestGlue.scanInputFiles(df.queryExecution.executedPlan).distinct.size.toLong
     // the unpruned truth: every live file read directly, same predicate
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q423t"
     val log = graft.sources.DurableManifestLog.open(tdir)
-    val allPaths = log
-      .liveFiles(log.head())
-      .toSeq
-      .sortBy(x => (x.dir, x.file))
-      .map(x => s"$tdir/${x.dir}/${x.file}")
+    val allPaths = StagedBatches(tdir).paths(log.liveFiles(log.head()))
     val fr = s.read
       .parquet(allPaths: _*)
       .filter(col("k").between(lo, hi))
@@ -15869,23 +15570,17 @@ object Queries {
   // and read once at planning.
   def streamingCdfSource(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestCatalog, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q424t")
-    s.sql("CREATE TABLE graft_mfst.db.q424t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q424_src")
+    import graft.sources.DurableManifestLog
+    val tdir = mfstTable(s, "q424t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q424_src")
     s.sql("INSERT INTO graft_mfst.db.q424t SELECT k, cents FROM q424_src WHERE k % 2 = 0") // v1
     s.sql("INSERT INTO graft_mfst.db.q424t SELECT k, cents FROM q424_src WHERE k % 2 = 1") // v2
-    val tdir = s"${ManifestCatalog.defaultWarehouse}/db/q424t"
     val log = DurableManifestLog.open(tdir)
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$tdir/$g").map(f => FileRef(g, f))
+    val stage = StagedBatches(tdir)
+    import stage.refs
     def metaRead(v: Long): DataFrame =
       s.read
-        .parquet(log.liveFiles(v).toSeq.sortBy(r => (r.dir, r.file)).map(r => s"$tdir/${r.dir}/${r.file}"): _*)
+        .parquet(stage.paths(log.liveFiles(v)): _*)
         .select(
           col("k"),
           col("cents"),
@@ -15894,33 +15589,35 @@ object Queries {
           col("_metadata.row_index").as("ri")
         )
     // v3: a DV delete of the k%10=4 cohort
-    metaRead(log.head()).filter(col("k") % 10 === 4).select("d", "f", "ri").coalesce(1).write.mode(ow).parquet(s"$tdir/dv3")
-    val v3 = log.tryCommit("main", log.head(), "delete_dv", dvAdd = refs("dv3")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    metaRead(log.head())
+      .filter(col("k") % 10 === 4)
+      .select("d", "f", "ri")
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .parquet(s"$tdir/dv3")
+    val v3 = committed(log.tryCommit("main", log.head(), "delete_dv", dvAdd = refs("dv3")))
     // v4: compaction-rewrite absorbing the tombstones + cents+7 on
     // k%10=5, the pre/post images staged as cdc (writer-produced)
     val tomb = s.read.parquet(s"$tdir/dv3")
-    val preState = metaRead(v3).join(broadcast(tomb), Seq("d", "f", "ri"), "left_anti").select("k", "cents").persist()
-    preState
-      .withColumn("cents", col("cents") + when(col("k") % 10 === 5, 7L).otherwise(0L))
-      .repartition(2)
-      .write
-      .mode(ow)
-      .parquet(s"$tdir/rw4")
-    val changed = preState.filter(col("k") % 10 === 5)
-    changed
-      .select(lit("update_preimage").as("change_type"), col("k"), col("cents"))
-      .unionAll(changed.select(lit("update_postimage").as("change_type"), col("k"), (col("cents") + 7L).as("cents")))
-      .coalesce(1)
-      .write
-      .mode(ow)
-      .parquet(s"$tdir/cdc4")
-    val liveAtV3 = log.liveFiles(v3).toSeq
-    log.tryCommit("main", v3, "rewrite_cdc", add = refs("rw4"), remove = liveAtV3, cdc = refs("cdc4")) match {
-      case Committed(_, _) => (); case o => sys.error(o.toString)
+    withCached(metaRead(v3).join(broadcast(tomb), Seq("d", "f", "ri"), "left_anti").select("k", "cents")) { preState =>
+      preState
+        .withColumn("cents", col("cents") + when(col("k") % 10 === 5, 7L).otherwise(0L))
+        .repartition(2)
+        .write
+        .mode("overwrite")
+        .parquet(s"$tdir/rw4")
+      val changed = preState.filter(col("k") % 10 === 5)
+      changed
+        .select(lit("update_preimage").as("change_type"), col("k"), col("cents"))
+        .unionAll(changed.select(lit("update_postimage").as("change_type"), col("k"), (col("cents") + 7L).as("cents")))
+        .coalesce(1)
+        .write
+        .mode("overwrite")
+        .parquet(s"$tdir/cdc4")
+      val liveAtV3 = log.liveFiles(v3).toSeq
+      committed(log.tryCommit("main", v3, "rewrite_cdc", add = refs("rw4"), remove = liveAtV3, cdc = refs("cdc4")))
     }
-    preState.unpersist()
     // ---- stream the feed to a sink with a checkpoint, then stop
     val scratch = graft.operators.Scratch.dir("graft-cdfsrc")
     val feedDir = s"$scratch/feed"
@@ -15943,11 +15640,6 @@ object Queries {
     // exactly it, from the checkpointed version offset
     s.sql("INSERT INTO graft_mfst.db.q424t SELECT k + 20000000, cents FROM q424_src WHERE k % 50 = 0")
     drainFeed()
-    val feed = s.read.parquet(feedDir).persist()
-    val newRows = feed.count() - nBeforeRestart
-    val v5Rows = feed.filter(col("_commit_version") === 5L).count()
-    val resumedOnlyNew = if (newRows == v5Rows && newRows > 0) 1L else 0L
-    // ---- earn the feed: v1 + applied deltas ≡ the head read
     val P = 1000000007L
     def fp(df: DataFrame): (Long, Long, Long) = {
       val r = df
@@ -15959,34 +15651,37 @@ object Queries {
         .collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    // the feed starts at genesis (startingVersion 0), so the replay
-    // base is the EMPTY table: head ≡ Σ inserts/post-images − Σ
-    // deletes/pre-images, as additive multiset fingerprints
-    val fpHead = fp(metaRead(log.head()).select("k", "cents"))
-    val fpAdd = fp(feed.filter(col("_change_type").isin("insert", "update_postimage")).select("k", "cents"))
-    val fpRem = fp(feed.filter(col("_change_type").isin("delete", "update_preimage")).select("k", "cents"))
-    val eqApply =
-      if (
-        fpHead._1 == fpAdd._1 - fpRem._1 &&
-        fpHead._2 % P == (((fpAdd._2 - fpRem._2) % P) + P) % P &&
-        fpHead._3 == fpAdd._3 - fpRem._3
-      ) 1L
-      else 0L
-    val out = feed
-      .groupBy(col("_commit_version").as("version"))
-      .agg(
-        sum(when(col("_change_type") === "insert", 1L).otherwise(0L)).as("n_inserts"),
-        sum(when(col("_change_type") === "delete", 1L).otherwise(0L)).as("n_deletes"),
-        sum(when(col("_change_type") === "update_preimage", 1L).otherwise(0L)).as("n_update_pre"),
-        sum(when(col("_change_type") === "update_postimage", 1L).otherwise(0L)).as("n_update_post")
-      )
-      .withColumn("eq_apply", lit(eqApply))
-      .withColumn("resumed_only_new", lit(resumedOnlyNew))
-      .orderBy("version")
-    val result = out.collect()
-    feed.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(result: _*), out.schema)
-      .orderBy("version")
+    withCached(s.read.parquet(feedDir)) { feed =>
+      val newRows = feed.count() - nBeforeRestart
+      val v5Rows = feed.filter(col("_commit_version") === 5L).count()
+      val resumedOnlyNew = if (newRows == v5Rows && newRows > 0) 1L else 0L
+      // ---- earn the feed: v1 + applied deltas ≡ the head read
+      // the feed starts at genesis (startingVersion 0), so the replay
+      // base is the EMPTY table: head ≡ Σ inserts/post-images − Σ
+      // deletes/pre-images, as additive multiset fingerprints
+      val fpHead = fp(metaRead(log.head()).select("k", "cents"))
+      val fpAdd = fp(feed.filter(col("_change_type").isin("insert", "update_postimage")).select("k", "cents"))
+      val fpRem = fp(feed.filter(col("_change_type").isin("delete", "update_preimage")).select("k", "cents"))
+      val eqApply =
+        if (
+          fpHead._1 == fpAdd._1 - fpRem._1 &&
+          fpHead._2 % P == (((fpAdd._2 - fpRem._2) % P) + P) % P &&
+          fpHead._3 == fpAdd._3 - fpRem._3
+        ) 1L
+        else 0L
+      val out = feed
+        .groupBy(col("_commit_version").as("version"))
+        .agg(
+          sum(when(col("_change_type") === "insert", 1L).otherwise(0L)).as("n_inserts"),
+          sum(when(col("_change_type") === "delete", 1L).otherwise(0L)).as("n_deletes"),
+          sum(when(col("_change_type") === "update_preimage", 1L).otherwise(0L)).as("n_update_pre"),
+          sum(when(col("_change_type") === "update_postimage", 1L).otherwise(0L)).as("n_update_post")
+        )
+        .withColumn("eq_apply", lit(eqApply))
+        .withColumn("resumed_only_new", lit(resumedOnlyNew))
+        .orderBy("version")
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    }.orderBy("version")
   }
 
   // ROW-LEVEL SQL OVER THE FILE TABLE — UPDATE / DELETE / MERGE INTO
@@ -16007,14 +15702,10 @@ object Queries {
   // write, Spark's vectorized paths); the commit is metadata.
   def manifestRowLevelSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestCatalog, ManifestLog}
-    import ManifestLog.{Committed, Conflicted, FileRef}
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q425t")
-    s.sql("CREATE TABLE graft_mfst.db.q425t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q425_src")
+    import graft.sources.{DurableManifestLog, ManifestLog}
+    import ManifestLog.Conflicted
+    mfstTable(s, "q425t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q425_src")
     s.sql("INSERT INTO graft_mfst.db.q425t SELECT k, cents FROM q425_src") // v1
     s.sql("UPDATE graft_mfst.db.q425t SET cents = cents + 100 WHERE k % 5 = 0") // v2
     s.sql("DELETE FROM graft_mfst.db.q425t WHERE k % 7 = 0") // v3
@@ -16037,17 +15728,15 @@ object Queries {
     // strict-OCC demo on a side table: an append lands between a
     // rewrite's scan and its commit — the stale replace ABORTS and the
     // appended row survives
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q425side")
-    s.sql("CREATE TABLE graft_mfst.db.q425side (k BIGINT)")
+    val sideDir = mfstTable(s, "q425side", "(k BIGINT)")
     s.sql("INSERT INTO graft_mfst.db.q425side VALUES (1), (2)") // v1
-    val sideDir = s"${ManifestCatalog.defaultWarehouse}/db/q425side"
+    val side = StagedBatches(sideDir)
     val other = DurableManifestLog.open(sideDir)
     val sideLive1 = other.liveFiles(1L).toSeq
     s.range(1).select((col("id") + 7L).as("k")).coalesce(1).write.parquet(s"$sideDir/x")
-    val xRefs = GraftFs.listDataFiles(s"$sideDir/x").map(f => FileRef("x", f))
-    require(other.tryCommit("main", 1L, "append", add = xRefs).isInstanceOf[Committed])
+    committed(other.tryCommit("main", 1L, "append", add = side.refs("x")))
     s.range(1).select(col("id").as("k")).coalesce(1).write.parquet(s"$sideDir/y")
-    val yRefs = GraftFs.listDataFiles(s"$sideDir/y").map(f => FileRef("y", f))
+    val yRefs = side.refs("y")
     val aborted = other.tryCommit("main", 1L, "replace_update", add = yRefs, remove = sideLive1, strict = true) match {
       case Conflicted(_, _) => 1L
       case _                => 0L
@@ -16078,23 +15767,8 @@ object Queries {
   // and shipped like a LocalScan.
   def manifestMetadataSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q426t")
-    s.sql("CREATE TABLE graft_mfst.db.q426t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-    // persisted once: the maxK agg materializes the cache; the 8 INSERTs
-    // below re-read it instead of re-scanning the base table
-    orders.persist().createOrReplaceTempView("q426_src")
-    val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
-    val w = 1L + maxK / 8L
-    (0 until 8).foreach { i =>
-      s.sql(
-        s"INSERT INTO graft_mfst.db.q426t SELECT /*+ COALESCE(1) */ k, cents FROM q426_src " +
-          s"WHERE k >= ${i * w} AND k < ${(i + 1) * w}"
-      )
-    }
-    orders.unpersist()
+    mfstTable(s, "q426t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    val w = insertKeyZones(s, "q426t", ordersCents(s, dir), "k, cents")
     val hist = s
       .sql(
         "SELECT 'history' AS section, version AS id, n_added AS a, n_removed AS b, n_dv AS c, op " +
@@ -16124,19 +15798,13 @@ object Queries {
   // read is O(|changed files|); the IVM merge is group-cardinality.
   def streamingLakehouseLoop(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q427t")
-    s.sql("CREATE TABLE graft_mfst.db.q427t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    mfstTable(s, "q427t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
     val scratch = graft.operators.Scratch.dir("graft-lakeloop")
-    // staging source persisted once across the staged chunk writes
-    // (the q383/q310 chunk-staging lesson)
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .persist()
-    (0 to 3).foreach { i =>
-      orders.filter(col("k") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/in/z$i")
+    withCached(ordersCents(s, dir)) { orders =>
+      (0 to 3).foreach { i =>
+        orders.filter(col("k") % 4 === i).coalesce(1).write.mode("overwrite").parquet(s"$scratch/in/z$i")
+      }
     }
-    orders.unpersist()
     val schema = s.read.parquet(s"$scratch/in/z0").schema
     val q = s.readStream
       .schema(schema)
@@ -16154,38 +15822,37 @@ object Queries {
       .start()
     try q.awaitTermination()
     finally q.stop()
-    val feed = s.table("graft_mfst.db.q427t.changes").persist()
-    // one micro-batch = one chunk = one commit: every version's rows
-    // are single-cohort
-    val perVersion = feed
-      .groupBy(col("_commit_version"))
-      .agg(countDistinct(col("k") % 4).as("n_cohorts"))
-    val singleCohort = if (perVersion.filter(col("n_cohorts") =!= 1L).isEmpty) 1L else 0L
-    // IVM from the feed vs the direct table aggregate, per cohort
-    val ivm = feed
-      .filter(col("_change_type") === "insert")
-      .groupBy((col("k") % 4).as("cohort"))
-      .agg(count(lit(1)).as("n_inserts"), sum(col("cents")).as("cents_sum"))
-    val direct = s
-      .table("graft_mfst.db.q427t")
-      .groupBy((col("k") % 4).as("cohort"))
-      .agg(count(lit(1)).as("dn"), sum(col("cents")).as("dc"))
-    val eqIvm =
-      if (
-        ivm
-          .join(direct, Seq("cohort"), "full_outer")
-          .filter(col("n_inserts") =!= col("dn") || col("cents_sum") =!= col("dc") ||
-            col("n_inserts").isNull || col("dn").isNull)
-          .isEmpty
-      ) 1L
-      else 0L
-    val out = ivm
-      .withColumn("single_cohort_commits", lit(singleCohort))
-      .withColumn("eq_ivm", lit(eqIvm))
-      .orderBy("cohort")
-    val result = out.collect()
-    feed.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(result: _*), out.schema).orderBy("cohort")
+    withCached(s.table("graft_mfst.db.q427t.changes")) { feed =>
+      // one micro-batch = one chunk = one commit: every version's rows
+      // are single-cohort
+      val perVersion = feed
+        .groupBy(col("_commit_version"))
+        .agg(countDistinct(col("k") % 4).as("n_cohorts"))
+      val singleCohort = if (perVersion.filter(col("n_cohorts") =!= 1L).isEmpty) 1L else 0L
+      // IVM from the feed vs the direct table aggregate, per cohort
+      val ivm = feed
+        .filter(col("_change_type") === "insert")
+        .groupBy((col("k") % 4).as("cohort"))
+        .agg(count(lit(1)).as("n_inserts"), sum(col("cents")).as("cents_sum"))
+      val direct = s
+        .table("graft_mfst.db.q427t")
+        .groupBy((col("k") % 4).as("cohort"))
+        .agg(count(lit(1)).as("dn"), sum(col("cents")).as("dc"))
+      val eqIvm =
+        if (
+          ivm
+            .join(direct, Seq("cohort"), "full_outer")
+            .filter(col("n_inserts") =!= col("dn") || col("cents_sum") =!= col("dc") ||
+              col("n_inserts").isNull || col("dn").isNull)
+            .isEmpty
+        ) 1L
+        else 0L
+      val out = ivm
+        .withColumn("single_cohort_commits", lit(singleCohort))
+        .withColumn("eq_ivm", lit(eqIvm))
+        .orderBy("cohort")
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    }.orderBy("cohort")
   }
 
   // VACUUM THE MANIFEST TABLE — the physical half of the retention
@@ -16206,22 +15873,17 @@ object Queries {
   // arithmetic over the log.
   def manifestVacuum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestCatalog, ManifestLog, ManifestMaintenance}
-    import ManifestLog.{Conflicted, FileRef}
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q428t")
-    s.sql("CREATE TABLE graft_mfst.db.q428t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q428_src")
+    import graft.sources.{DurableManifestLog, ManifestLog, ManifestMaintenance}
+    import ManifestLog.Conflicted
+    val tdir = mfstTable(s, "q428t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q428_src")
     s.sql("INSERT INTO graft_mfst.db.q428t SELECT /*+ COALESCE(1) */ k, cents FROM q428_src WHERE k % 2 = 0") // v1
     s.sql("INSERT INTO graft_mfst.db.q428t SELECT /*+ COALESCE(1) */ k, cents FROM q428_src WHERE k % 2 = 1") // v2
     s.sql("UPDATE graft_mfst.db.q428t SET cents = cents + 100 WHERE k % 5 = 0") // v3: rewrites v1+v2's files
-    val tdir = s"${ManifestCatalog.defaultWarehouse}/db/q428t"
     val log = DurableManifestLog.open(tdir)
     // a strict-OCC loser stages a rewrite that never publishes
     s.range(1).select(col("id").as("k"), col("id").as("cents")).coalesce(1).write.parquet(s"$tdir/loser")
-    val loserRefs = GraftFs.listDataFiles(s"$tdir/loser").map(f => FileRef("loser", f))
+    val loserRefs = StagedBatches(tdir).refs("loser")
     val aborted = log.tryCommit("main", 1L, "replace_update", add = loserRefs,
       remove = log.liveFiles(1L).toSeq, strict = true) match {
       case Conflicted(_, _) => 1L
@@ -16286,16 +15948,10 @@ object Queries {
   // replay + file scan as any read — the ref is one map lookup.
   def manifestRefsSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestCatalog, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q429t")
-    s.sql("CREATE TABLE graft_mfst.db.q429t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q429_src")
+    import graft.sources.DurableManifestLog
+    val tdir = mfstTable(s, "q429t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q429_src")
     s.sql("INSERT INTO graft_mfst.db.q429t SELECT k, cents FROM q429_src WHERE k % 2 = 0") // v1
-    val tdir = s"${ManifestCatalog.defaultWarehouse}/db/q429t"
     val log = DurableManifestLog.open(tdir)
     log.tag("audit", 1L)
     s.sql("INSERT INTO graft_mfst.db.q429t SELECT k, cents FROM q429_src WHERE k % 2 = 1") // v2
@@ -16305,8 +15961,7 @@ object Queries {
       .coalesce(1)
       .write
       .parquet(s"$tdir/staged")
-    val stagedRefs = GraftFs.listDataFiles(s"$tdir/staged").map(f => FileRef("staged", f))
-    require(log.tryCommit("wap", 2L, "stage", add = stagedRefs).isInstanceOf[Committed])
+    committed(log.tryCommit("wap", 2L, "stage", add = StagedBatches(tdir).refs("staged")))
     def census(q: String): (Long, Long, Long) = {
       val r = s.sql(q).collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -16351,61 +16006,42 @@ object Queries {
   // same metadata entry, just naming files in two directories.
   def durableMultiTableCommit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
+    import graft.sources.DurableManifestLog
     val base = graft.operators.Scratch.dir("graft-dmulti")
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
-        (col("o_orderkey") % 100).as("dk")
-      )
-      // persisted across the three fact staging writes (separate
-      // actions — the chunk-staging lesson)
-      .persist()
-    orders.filter(col("k") % 2 === 0).repartition(1).write.mode(ow).parquet(s"$base/fact_even")
-    orders.filter(col("k") % 2 === 1).repartition(1).write.mode(ow).parquet(s"$base/fact_odd")
-    // the new-generation fact cohort references dim keys 100..119,
-    // which exist ONLY in dim generation 2
-    orders
-      .filter(col("k") % 50 === 0)
-      .select((col("k") + 10000000L).as("k"), col("cents"), (lit(100L) + col("k") % 20).as("dk"))
-      .repartition(1)
-      .write
-      .mode(ow)
-      .parquet(s"$base/fact_extra")
-    orders.unpersist()
-    s.range(100).select(col("id").as("dk"), (col("id") * 10).as("attr")).coalesce(1).write.mode(ow).parquet(s"$base/dim_g1")
-    s.range(120).select(col("id").as("dk"), (col("id") * 10 + 1).as("attr")).coalesce(1).write.mode(ow).parquet(s"$base/dim_g2")
-    def refs(g: String): Seq[FileRef] = GraftFs.listDataFiles(s"$base/$g").map(f => FileRef(g, f))
+    val stage = StagedBatches(base)
+    import stage.refs
+    // cached across the three fact staging writes (separate actions)
+    withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"), cents, (col("o_orderkey") % 100).as("dk"))) {
+      orders =>
+        stage.write(orders.filter(col("k") % 2 === 0), "fact_even")
+        stage.write(orders.filter(col("k") % 2 === 1), "fact_odd")
+        // the new-generation fact cohort references dim keys 100..119,
+        // which exist ONLY in dim generation 2
+        stage.write(
+          orders
+            .filter(col("k") % 50 === 0)
+            .select((col("k") + 10000000L).as("k"), col("cents"), (lit(100L) + col("k") % 20).as("dk")),
+          "fact_extra"
+        )
+    }
+    s.range(100).select(col("id").as("dk"), (col("id") * 10).as("attr"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/dim_g1")
+    s.range(120).select(col("id").as("dk"), (col("id") * 10 + 1).as("attr"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/dim_g2")
     val logA = DurableManifestLog.open(base)
     // v1: ONE commit lands the fact batch AND its dim generation
-    val v1 = logA.tryCommit("main", 0L, "etl_batch_1", add = refs("fact_even") ++ refs("dim_g1")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v1 = committed(logA.tryCommit("main", 0L, "etl_batch_1", add = refs("fact_even") ++ refs("dim_g1")))
     // a second instance (another process) appends fact-only from v1
     val logB = DurableManifestLog.open(base)
-    val v2 = logB.tryCommit("main", v1, "fact_append", add = refs("fact_odd")) match {
-      case Committed(v, _) => v; case o => sys.error(o.toString)
-    }
+    val v2 = committed(logB.tryCommit("main", v1, "fact_append", add = refs("fact_odd")))
     // A, still reading v1, atomically swaps the dim generation and
     // lands the fact rows that need it — disjoint from B ⇒ rebase
-    val outSwap = logA.tryCommit(
-      "main",
-      v1,
-      "etl_batch_2",
-      add = refs("dim_g2") ++ refs("fact_extra"),
-      remove = refs("dim_g1")
+    val v3 = committed(
+      logA.tryCommit("main", v1, "etl_batch_2", add = refs("dim_g2") ++ refs("fact_extra"), remove = refs("dim_g1"))
     )
-    val (v3, rebased) = outSwap match {
-      case Committed(v, _) => (v, if (logA.chain(v).last.parent != v1) 1L else 0L)
-      case o               => sys.error(o.toString)
-    }
-    def tableRead(v: Long, prefix: String, log: DurableManifestLog): DataFrame = {
-      val fs = log.liveFiles(v).toSeq.filter(_.dir.startsWith(prefix)).sortBy(r => (r.dir, r.file))
-      s.read.parquet(fs.map(r => s"$base/${r.dir}/${r.file}"): _*)
-    }
+    val rebased = if (logA.chain(v3).last.parent != v1) 1L else 0L
+    def tableRead(v: Long, prefix: String, log: DurableManifestLog): DataFrame =
+      s.read.parquet(stage.paths(log.liveFiles(v).filter(_.dir.startsWith(prefix))): _*)
     def snapshot(v: Long, log: DurableManifestLog): (Long, Long, Long) = {
       val fact = tableRead(v, "fact", log)
       val dim = tableRead(v, "dim", log)
@@ -16451,11 +16087,8 @@ object Queries {
   // zone-mapped BatchScan every pinned version serves.
   def manifestTimestampAsOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q431t")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q431_src")
+    dropMfstTable(s, "q431t")
+    ordersCents(s, dir).createOrReplaceTempView("q431_src")
     // pinned commit clocks: v1@10s, v2@20s, v3@30s epoch
     val ticks = Iterator(10000L, 20000L, 30000L)
     graft.sources.DurableManifestLog.withClock(() => ticks.next()) {
@@ -16507,29 +16140,13 @@ object Queries {
   // over-reads, never wrong-answers.
   def manifestColumnStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q432t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q432t (k BIGINT, m BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')"
+    val tdir = mfstTable(s, "q432t", "(k BIGINT, m BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    val w = insertKeyZones(
+      s,
+      "q432t",
+      t(s, dir, "orders").select(col("o_orderkey").as("k"), (col("o_orderkey") + 10000000L).as("m"), cents),
+      "k, m, cents"
     )
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        (col("o_orderkey") + 10000000L).as("m"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-    // persisted once: the maxK agg materializes the cache; the 8 INSERTs
-    // below re-read it instead of re-scanning the base table
-    orders.persist().createOrReplaceTempView("q432_src")
-    val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
-    val w = 1L + maxK / 8L
-    (0 until 8).foreach { i =>
-      s.sql(
-        s"INSERT INTO graft_mfst.db.q432t SELECT /*+ COALESCE(1) */ k, m, cents FROM q432_src " +
-          s"WHERE k >= ${i * w} AND k < ${(i + 1) * w}"
-      )
-    }
-    orders.unpersist()
     // the probe references ONLY the non-cluster column m
     val lo = 10000000L + w / 2
     val hi = 10000000L + w + w / 2
@@ -16546,13 +16163,8 @@ object Queries {
     val nullScanned =
       org.apache.spark.sql.graft.manifestGlue.scanInputFiles(nullDf.queryExecution.executedPlan).distinct.size.toLong
     // the unpruned truth: every live file read directly, same predicate
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q432t"
     val log = graft.sources.DurableManifestLog.open(tdir)
-    val allPaths = log
-      .liveFiles(log.head())
-      .toSeq
-      .sortBy(x => (x.dir, x.file))
-      .map(x => s"$tdir/${x.dir}/${x.file}")
+    val allPaths = StagedBatches(tdir).paths(log.liveFiles(log.head()))
     val fr = s.read
       .parquet(allPaths: _*)
       .filter(col("m").between(lo, hi))
@@ -16581,12 +16193,8 @@ object Queries {
   // metadata-sized commit record — no file is rewritten, ever.
   def manifestSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q433t")
-    s.sql("CREATE TABLE graft_mfst.db.q433t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q433_src")
+    mfstTable(s, "q433t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q433_src")
     s.sql("INSERT INTO graft_mfst.db.q433t SELECT k, cents FROM q433_src WHERE k % 2 = 0") // v1: (k, cents)
     s.sql("ALTER TABLE graft_mfst.db.q433t ADD COLUMN bonus BIGINT") // v2: + bonus
     s.sql(
@@ -16630,37 +16238,21 @@ object Queries {
   // stays |live files| driver arithmetic.
   def manifestPartitionedTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q434t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q434t (k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) " +
-        "TBLPROPERTIES ('cluster_key'='k')"
+    val tdir = mfstTable(
+      s,
+      "q434t",
+      "(k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) TBLPROPERTIES ('cluster_key'='k')"
     )
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        (col("o_orderkey") % 4).as("p"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-    // persisted once: the maxK agg materializes the cache; the 8 INSERTs
-    // below re-read it instead of re-scanning the base table
-    orders.persist().createOrReplaceTempView("q434_src")
-    val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
-    val w = 1L + maxK / 8L
-    (0 until 8).foreach { i =>
-      s.sql(
-        s"INSERT INTO graft_mfst.db.q434t SELECT /*+ COALESCE(1) */ k, cents, p FROM q434_src " +
-          s"WHERE k >= ${i * w} AND k < ${(i + 1) * w}"
-      )
-    }
-    orders.unpersist()
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q434t"
+    val w = insertKeyZones(
+      s,
+      "q434t",
+      t(s, dir, "orders").select(col("o_orderkey").as("k"), (col("o_orderkey") % 4).as("p"), cents),
+      "k, cents, p"
+    )
     val log = graft.sources.DurableManifestLog.open(tdir)
-    val allRefs = log.liveFiles(log.head()).toSeq.sortBy(x => (x.dir, x.file))
-    val nTotal = allRefs.size.toLong // 8 commits × 4 partitions
-    val direct = s.read
-      .option("basePath", tdir)
-      .parquet(allRefs.map(x => s"$tdir/${x.dir}/${x.file}"): _*)
+    val allPaths = StagedBatches(tdir).paths(log.liveFiles(log.head()))
+    val nTotal = allPaths.size.toLong // 8 commits × 4 partitions
+    val direct = s.read.option("basePath", tdir).parquet(allPaths: _*)
     val lo = w / 2
     val hi = w + w / 2
     def probe(sql: String, directPred: org.apache.spark.sql.Column): (Long, Long, Long, Long, Long) = {
@@ -16696,18 +16288,9 @@ object Queries {
   // one changed file.
   def manifestPartitionedCdf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q435t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q435t (k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) " +
-        "TBLPROPERTIES ('cluster_key'='k')"
-    )
+    mfstTable(s, "q435t", "(k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) TBLPROPERTIES ('cluster_key'='k')")
     t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        (col("o_orderkey") % 4).as("p"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
+      .select(col("o_orderkey").as("k"), (col("o_orderkey") % 4).as("p"), cents)
       .createOrReplaceTempView("q435_src")
     s.sql("INSERT INTO graft_mfst.db.q435t SELECT k, cents, p FROM q435_src WHERE k % 2 = 0") // v1
     s.sql("INSERT INTO graft_mfst.db.q435t SELECT k, cents, p FROM q435_src WHERE k % 2 = 1") // v2
@@ -16740,18 +16323,13 @@ object Queries {
   // the original, and both op tags are pinned.
   def manifestPartitionOverwrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q436t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q436t (k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) " +
-        "TBLPROPERTIES ('cluster_key'='k')"
+    val tdir = mfstTable(
+      s,
+      "q436t",
+      "(k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) TBLPROPERTIES ('cluster_key'='k')"
     )
     t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        (col("o_orderkey") % 4).as("p"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
+      .select(col("o_orderkey").as("k"), (col("o_orderkey") % 4).as("p"), cents)
       .createOrReplaceTempView("q436_src")
     s.sql("INSERT INTO graft_mfst.db.q436t SELECT k, cents, p FROM q436_src") // v1: all four partitions
     // v2: DYNAMIC overwrite of partition 2 only — the replacement
@@ -16773,7 +16351,7 @@ object Queries {
     val v1 = census(s"$sel VERSION AS OF 1")
     val v2 = census(s"$sel VERSION AS OF 2")
     val head = census(sel)
-    val log = graft.sources.DurableManifestLog.open(s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q436t")
+    val log = graft.sources.DurableManifestLog.open(tdir)
     val ops = log.chain(log.head()).map(_.op)
     val opsOk = if (ops == Vector("genesis", "append", "overwrite_partitions", "overwrite_table")) 1L else 0L
     Seq(
@@ -16797,30 +16375,25 @@ object Queries {
   // — cost follows the deleted cohort, never the table.
   def manifestMetadataDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q437t")
     // declared (p, k, cents) ON PURPOSE: createTable NORMALIZES the
     // partition column to last (the Hive convention), so any
     // declaration order plans metadata deletes — the r13 verdict's
     // usability ask #6
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q437t (p BIGINT, k BIGINT, cents BIGINT) PARTITIONED BY (p) " +
-        "TBLPROPERTIES ('cluster_key'='k')"
+    val tdir = mfstTable(
+      s,
+      "q437t",
+      "(p BIGINT, k BIGINT, cents BIGINT) PARTITIONED BY (p) TBLPROPERTIES ('cluster_key'='k')"
     )
     require(
       s.table("graft_mfst.db.q437t").schema.fieldNames.toSeq == Seq("k", "cents", "p"),
       "the catalog must normalize the partition column to LAST"
     )
     t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        (col("o_orderkey") % 4).as("p"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
+      .select(col("o_orderkey").as("k"), (col("o_orderkey") % 4).as("p"), cents)
       .createOrReplaceTempView("q437_src")
     s.sql("INSERT INTO graft_mfst.db.q437t SELECT k, cents, p FROM q437_src") // v1
     s.sql("DELETE FROM graft_mfst.db.q437t WHERE p = 2") // v2: metadata-only
-    val log = graft.sources.DurableManifestLog.open(s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q437t")
+    val log = graft.sources.DurableManifestLog.open(tdir)
     val v2c = log.chain(2L).last
     val metaOnly = if (v2c.op == "delete_partitions" && v2c.added.isEmpty && v2c.cdc.isEmpty) 1L else 0L
     val nonAlignedRefused =
@@ -16857,14 +16430,9 @@ object Queries {
   // and publishing move no data files.
   def manifestWapSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q438t")
-    s.sql("CREATE TABLE graft_mfst.db.q438t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q438_src")
+    val tdir = mfstTable(s, "q438t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q438_src")
     s.sql("INSERT INTO graft_mfst.db.q438t SELECT k, cents FROM q438_src WHERE k % 2 = 0") // v1 on main
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q438t"
     graft.sources.DurableManifestLog.open(tdir).createBranch("audit", 1L)
     def census(q: String): (Long, Long, Long) = {
       val r = s.sql(q).collect()(0)
@@ -16909,15 +16477,8 @@ object Queries {
   // are change-cardinality; the feed read stays O(|changed files|).
   def manifestCdcOnWrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q439t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q439t (k BIGINT, cents BIGINT) " +
-        "TBLPROPERTIES ('cluster_key'='k', 'change_feed'='true')"
-    )
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q439_src")
+    mfstTable(s, "q439t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k', 'change_feed'='true')")
+    ordersCents(s, dir).createOrReplaceTempView("q439_src")
     s.sql("INSERT INTO graft_mfst.db.q439t SELECT k, cents FROM q439_src") // v1
     s.sql("UPDATE graft_mfst.db.q439t SET cents = cents + 7 WHERE k % 10 = 3") // v2 + cdc
     s.sql("DELETE FROM graft_mfst.db.q439t WHERE k % 9 = 4") // v3 + cdc
@@ -16943,24 +16504,8 @@ object Queries {
   // reads exactly its group.
   def manifestOptimize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q440t")
-    s.sql("CREATE TABLE graft_mfst.db.q440t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-    // persisted once: the maxK agg materializes the cache; the 8 INSERTs
-    // below re-read it instead of re-scanning the base table
-    orders.persist().createOrReplaceTempView("q440_src")
-    val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
-    val w = 1L + maxK / 8L
-    (0 until 8).foreach { i =>
-      s.sql(
-        s"INSERT INTO graft_mfst.db.q440t SELECT /*+ COALESCE(1) */ k, cents FROM q440_src " +
-          s"WHERE k >= ${i * w} AND k < ${(i + 1) * w}"
-      )
-    }
-    orders.unpersist()
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q440t"
+    val tdir = mfstTable(s, "q440t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    val w = insertKeyZones(s, "q440t", ordersCents(s, dir), "k, cents")
     val log = graft.sources.DurableManifestLog.open(tdir)
     val nBefore = log.liveFiles(log.head()).size.toLong
     val schema = s.table("graft_mfst.db.q440t").schema
@@ -17015,18 +16560,10 @@ object Queries {
   // arithmetic.
   def manifestScanStatistics(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q441f")
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q441d")
-    s.sql("CREATE TABLE graft_mfst.db.q441f (k BIGINT, cust BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    mfstTable(s, "q441f", "(k BIGINT, cust BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
     // the dim has NO cluster key: rows/bytes are recorded regardless
-    s.sql("CREATE TABLE graft_mfst.db.q441d (k BIGINT, bal BIGINT)")
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        col("o_custkey").as("cust"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
+    mfstTable(s, "q441d", "(k BIGINT, bal BIGINT)")
+    val orders = t(s, dir, "orders").select(col("o_orderkey").as("k"), col("o_custkey").as("cust"), cents)
     orders.createOrReplaceTempView("q441_fsrc")
     t(s, dir, "customer")
       .filter(col("c_custkey") % 50 === 0)
@@ -17086,18 +16623,9 @@ object Queries {
   // names at plan time only (rows are positional).
   def manifestColumnMapping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q442t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q442t (k BIGINT, a BIGINT, b BIGINT) " +
-        "TBLPROPERTIES ('cluster_key'='k', 'column_mapping'='name')"
-    )
+    mfstTable(s, "q442t", "(k BIGINT, a BIGINT, b BIGINT) TBLPROPERTIES ('cluster_key'='k', 'column_mapping'='name')")
     t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("a"),
-        (col("o_orderkey") % 1000).as("b")
-      )
+      .select(col("o_orderkey").as("k"), cents.as("a"), (col("o_orderkey") % 1000).as("b"))
       .createOrReplaceTempView("q442_src")
     s.sql("INSERT INTO graft_mfst.db.q442t SELECT k, a, b FROM q442_src WHERE k % 2 = 0") // v1
     s.sql("ALTER TABLE graft_mfst.db.q442t RENAME COLUMN a TO amount") // v2 (metadata-only)
@@ -17152,13 +16680,9 @@ object Queries {
   // path and one orphaned staging dir (vacuum debris) on the slow.
   def manifestIdempotentWriter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q443t")
-    s.sql("CREATE TABLE graft_mfst.db.q443t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    val src = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+    val tdir = mfstTable(s, "q443t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    val src = ordersCents(s, dir)
     def batch(i: Int) = src.filter(col("k") % 3 === i)
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q443t"
     val app = "q443-writer"
     val log = graft.sources.DurableManifestLog.open(tdir)
     val a0 = graft.sources.ManifestWrites.idempotentAppend(tdir, log, batch(0), Some("k"), app, 0L)
@@ -17173,8 +16697,7 @@ object Queries {
     // read raced) is refused at the CAS itself
     val staged = s"txn-replay-${java.util.UUID.randomUUID().toString.take(8)}"
     batch(1).write.parquet(s"$tdir/$staged")
-    val stagedRefs = graft.sources.GraftFs.listDataFiles(s"$tdir/$staged").map(f =>
-      graft.sources.ManifestLog.FileRef(staged, f))
+    val stagedRefs = StagedBatches(tdir).refs(staged)
     val commitRefused = log2.tryCommit(
       "main", log2.head(), "append", add = stagedRefs, txn = Some((app, 1L))
     ) match {
@@ -17219,12 +16742,8 @@ object Queries {
   // null-fill is per-row constant work in the reader.
   def manifestCdfEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q444t")
-    s.sql("CREATE TABLE graft_mfst.db.q444t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .createOrReplaceTempView("q444_src")
+    mfstTable(s, "q444t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q444_src")
     s.sql("INSERT INTO graft_mfst.db.q444t SELECT k, cents FROM q444_src WHERE k % 2 = 0") // v1
     val scratch = graft.operators.Scratch.dir("graft-cdfevo")
     val feedDir = s"$scratch/feed"
@@ -17247,14 +16766,6 @@ object Queries {
     s.sql("ALTER TABLE graft_mfst.db.q444t ADD COLUMN bonus BIGINT") // v2: set_schema
     s.sql("INSERT INTO graft_mfst.db.q444t SELECT k, cents, cents % 1000 FROM q444_src WHERE k % 2 = 1") // v3
     drainFeed() // restart across the ALTER: must serve exactly v3, evolved
-    val streamed = s.read.option("mergeSchema", "true").parquet(feedDir).persist()
-    val restartRows = streamed.filter(col("_commit_version") === 3L)
-    val resumedOnlyNew =
-      if (streamed.count() - nBeforeRestart == restartRows.count() && restartRows.count() > 0) 1L else 0L
-    // the BATCH feed spanning the ALTER serves the head schema with
-    // pre-ALTER rows null-filled; the schema commit contributes none
-    val batchFeed = s.read.table("graft_mfst.db.q444t.changes").persist()
-    val schemaCommitEmpty = if (batchFeed.filter(col("_commit_version") === 2L).count() == 0L) 1L else 0L
     // stream ≡ batch on the evolved cohort (count + both checksums)
     def sums(df: DataFrame): (Long, Long, Long) = {
       val r = df
@@ -17262,24 +16773,31 @@ object Queries {
         .collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    val eqStreamBatch =
-      if (sums(restartRows) == sums(batchFeed.filter(col("_commit_version") === 3L))) 1L else 0L
-    val out = batchFeed
-      .groupBy(col("_commit_version").as("version"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("cents")).as("cents_checksum"),
-        coalesce(sum(col("bonus")), lit(0L)).as("bonus_checksum"),
-        sum(when(col("bonus").isNull, 1L).otherwise(0L)).as("n_bonus_null")
-      )
-      .withColumn("resumed_only_new", lit(resumedOnlyNew))
-      .withColumn("schema_commit_empty", lit(schemaCommitEmpty))
-      .withColumn("eq_stream_batch", lit(eqStreamBatch))
-      .orderBy("version")
-    val result = out.collect()
-    streamed.unpersist()
-    batchFeed.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(result: _*), out.schema)
+    withCached(s.read.option("mergeSchema", "true").parquet(feedDir)) { streamed =>
+      val restartRows = streamed.filter(col("_commit_version") === 3L)
+      val resumedOnlyNew =
+        if (streamed.count() - nBeforeRestart == restartRows.count() && restartRows.count() > 0) 1L else 0L
+      // the BATCH feed spanning the ALTER serves the head schema with
+      // pre-ALTER rows null-filled; the schema commit contributes none
+      withCached(s.read.table("graft_mfst.db.q444t.changes")) { batchFeed =>
+        val schemaCommitEmpty = if (batchFeed.filter(col("_commit_version") === 2L).count() == 0L) 1L else 0L
+        val eqStreamBatch =
+          if (sums(restartRows) == sums(batchFeed.filter(col("_commit_version") === 3L))) 1L else 0L
+        val out = batchFeed
+          .groupBy(col("_commit_version").as("version"))
+          .agg(
+            count(lit(1)).as("n_rows"),
+            sum(col("cents")).as("cents_checksum"),
+            coalesce(sum(col("bonus")), lit(0L)).as("bonus_checksum"),
+            sum(when(col("bonus").isNull, 1L).otherwise(0L)).as("n_bonus_null")
+          )
+          .withColumn("resumed_only_new", lit(resumedOnlyNew))
+          .withColumn("schema_commit_empty", lit(schemaCommitEmpty))
+          .withColumn("eq_stream_batch", lit(eqStreamBatch))
+          .orderBy("version")
+        s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+      }
+    }
   }
 
   // CONCURRENT MAINTENANCE MATRIX — the Delta isolation table over
@@ -17304,31 +16822,25 @@ object Queries {
   // group's files with a broadcast, request-sized tombstone anti-join.
   def manifestMaintenanceMatrix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestCatalog, ManifestLog}
-    import ManifestLog.{Committed, Conflicted, FileRef}
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q445t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q445t (k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) " +
-        "TBLPROPERTIES ('cluster_key'='k')"
+    import graft.sources.{DurableManifestLog, GraftFs, ManifestLog}
+    import ManifestLog.{Conflicted, FileRef}
+    val tdir = mfstTable(
+      s,
+      "q445t",
+      "(k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) TBLPROPERTIES ('cluster_key'='k')"
     )
-    // staging source persisted once across the two INSERT actions (the
-    // temp view resolves to the cached plan — the chunk-staging lesson)
-    val q445Src = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
-        (col("o_orderkey") % 4).as("p")
-      )
-      .persist()
-    q445Src.createOrReplaceTempView("q445_src")
-    // the k%8 split puts files from BOTH inserts into every partition
-    // (p = k%4), so each partition holds 2 compactable files
-    s.sql("INSERT INTO graft_mfst.db.q445t SELECT k, cents, p FROM q445_src WHERE k % 8 < 4") // v1
-    s.sql("INSERT INTO graft_mfst.db.q445t SELECT k, cents, p FROM q445_src WHERE k % 8 >= 4") // v2
-    q445Src.unpersist()
-    val tdir = s"${ManifestCatalog.defaultWarehouse}/db/q445t"
+    // the temp view resolves to the cached plan, so the two INSERT
+    // actions scan orders once
+    withCached(t(s, dir, "orders").select(col("o_orderkey").as("k"), cents, (col("o_orderkey") % 4).as("p"))) {
+      q445Src =>
+        q445Src.createOrReplaceTempView("q445_src")
+        // the k%8 split puts files from BOTH inserts into every partition
+        // (p = k%4), so each partition holds 2 compactable files
+        s.sql("INSERT INTO graft_mfst.db.q445t SELECT k, cents, p FROM q445_src WHERE k % 8 < 4") // v1
+        s.sql("INSERT INTO graft_mfst.db.q445t SELECT k, cents, p FROM q445_src WHERE k % 8 >= 4") // v2
+    }
     val log = DurableManifestLog.open(tdir)
+    val stage = StagedBatches(tdir)
     val v2 = log.head()
     def census(): (Long, Long, Long) = {
       val r = s
@@ -17351,7 +16863,7 @@ object Queries {
           val inputs = log.liveFiles(v2).toSeq.filter(_.dir == s"p=$part").sortBy(_.file)
           s.read
             .option("basePath", tdir)
-            .parquet(inputs.map(r => s"$tdir/${r.dir}/${r.file}"): _*)
+            .parquet(stage.paths(inputs): _*)
             .select("k", "cents") // data columns only — the hive dir carries p
             .coalesce(1)
             .write
@@ -17371,10 +16883,8 @@ object Queries {
         }
         // NOTE: the compaction output lands under an UNPARTITIONED dir
         // on purpose? No — p must survive: stage under p=0 itself
-        staleCompact(0L, "p=0") match {
-          case Committed(_, _) => 1L
-          case o               => sys.error(s"disjoint compaction must land, got $o")
-        }
+        committed(staleCompact(0L, "p=0"))
+        1L
       } finally s.conf.set("spark.graft.partitionOverwriteMode", prevMode)
     val c2 = census()
     // ---- OVERLAP: overwrite p=2 lands; a compaction of p=2 planned
@@ -17399,7 +16909,7 @@ object Queries {
     // ---- DV DELETE then ABSORBING OPTIMIZE on p=3
     val p3Files = log.liveFiles(log.head()).toSeq.filter(_.dir == "p=3").sortBy(_.file)
     val p3Read = s.read
-      .parquet(p3Files.map(r => s"$tdir/${r.dir}/${r.file}"): _*)
+      .parquet(stage.paths(p3Files): _*)
       .select(
         col("k"),
         lit("p=3").as("d"),
@@ -17408,7 +16918,7 @@ object Queries {
       )
     // p=3 means k ≡ 3 (mod 4); k%5=4 intersects it (k ≡ 19 mod 20)
     p3Read.filter(col("k") % 5 === 4).select("d", "f", "ri").coalesce(1).write.parquet(s"$tdir/dv445")
-    val dvRefs = GraftFs.listDataFiles(s"$tdir/dv445").map(f => FileRef("dv445", f))
+    val dvRefs = stage.refs("dv445")
     val dvRowCounts = s.read
       .parquet(s"$tdir/dv445")
       .groupBy("d", "f")
@@ -17416,9 +16926,7 @@ object Queries {
       .collect()
       .map(r => FileRef(r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
-    log.tryCommit("main", log.head(), "delete_dv", dvAdd = dvRefs, dvRows = dvRowCounts) match {
-      case Committed(_, _) => (); case o => sys.error(o.toString)
-    }
+    committed(log.tryCommit("main", log.head(), "delete_dv", dvAdd = dvRefs, dvRows = dvRowCounts))
     // the guard window: a plain scan refuses while the tombstones
     // target LIVE files
     val dvGuard =
@@ -17471,20 +16979,14 @@ object Queries {
   // read only when tombstones exist.
   def manifestCdfMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{DurableManifestLog, GraftFs, ManifestCatalog, ManifestLog}
-    import ManifestLog.{Committed, FileRef}
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q446t")
-    s.sql(
-      "CREATE TABLE graft_mfst.db.q446t (k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) " +
-        "TBLPROPERTIES ('cluster_key'='k')"
+    import graft.sources.DurableManifestLog
+    val tdir = mfstTable(
+      s,
+      "q446t",
+      "(k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p) TBLPROPERTIES ('cluster_key'='k')"
     )
     t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
-        (col("o_orderkey") % 4).as("p")
-      )
+      .select(col("o_orderkey").as("k"), cents, (col("o_orderkey") % 4).as("p"))
       .createOrReplaceTempView("q446_src")
     s.sql("INSERT INTO graft_mfst.db.q446t SELECT k, cents, p FROM q446_src WHERE k % 8 < 4") // v1
     s.sql("INSERT INTO graft_mfst.db.q446t SELECT k, cents, p FROM q446_src WHERE k % 8 >= 4") // v2
@@ -17497,11 +16999,10 @@ object Queries {
     ) // v4: dynamic overwrite of p=1
     finally s.conf.set("spark.graft.partitionOverwriteMode", prevMode)
     // v5: DV delete of p=3's k%5=4 cohort
-    val tdir = s"${ManifestCatalog.defaultWarehouse}/db/q446t"
     val log = DurableManifestLog.open(tdir)
-    val p3Files = log.liveFiles(log.head()).toSeq.filter(_.dir == "p=3").sortBy(_.file)
+    val stage = StagedBatches(tdir)
     s.read
-      .parquet(p3Files.map(r => s"$tdir/${r.dir}/${r.file}"): _*)
+      .parquet(stage.paths(log.liveFiles(log.head()).filter(_.dir == "p=3")): _*)
       .select(
         col("k"), lit("p=3").as("d"),
         col("_metadata.file_name").as("f"), col("_metadata.row_index").as("ri"))
@@ -17510,14 +17011,10 @@ object Queries {
       .coalesce(1)
       .write
       .parquet(s"$tdir/dv446")
-    val dvRefs = GraftFs.listDataFiles(s"$tdir/dv446").map(f => FileRef("dv446", f))
-    log.tryCommit("main", log.head(), "delete_dv", dvAdd = dvRefs) match {
-      case Committed(_, _) => (); case o => sys.error(o.toString)
-    }
+    committed(log.tryCommit("main", log.head(), "delete_dv", dvAdd = stage.refs("dv446")))
     // v6: compaction absorbs p=3's tombstones — feed-INVISIBLE
     val schema = s.table("graft_mfst.db.q446t").schema
     graft.sources.ManifestMaintenance.compact(tdir, log, schema, Some("k"), groupSize = 2)
-    val feed = s.read.table("graft_mfst.db.q446t.changes").persist()
     // replay: Σ inserts − Σ deletes ≡ the head read (plain SQL serves
     // again — the absorption removed every live DV target)
     val P = 1000000007L
@@ -17527,28 +17024,28 @@ object Queries {
         .collect()(0)
       (r.getLong(0), r.getLong(1))
     }
-    val fpHead = fp(s.table("graft_mfst.db.q446t"))
-    val fpIns = fp(feed.filter(col("_change_type") === "insert").select("k", "cents"))
-    val fpDel = fp(feed.filter(col("_change_type") === "delete").select("k", "cents"))
-    val eqApply =
-      if (fpHead._1 == fpIns._1 - fpDel._1 && fpHead._2 % P == (((fpIns._2 - fpDel._2) % P) + P) % P) 1L
-      else 0L
-    val compactInvisible = if (feed.filter(col("_commit_version") === 6L).count() == 0L) 1L else 0L
-    val out = feed
-      .filter(col("_commit_version") <= 5L)
-      .groupBy(col("_commit_version").as("version"))
-      .agg(
-        sum(when(col("_change_type") === "insert", 1L).otherwise(0L)).as("n_inserts"),
-        sum(when(col("_change_type") === "delete", 1L).otherwise(0L)).as("n_deletes"),
-        sum(when(col("_change_type") === "insert", col("k")).otherwise(0L)).as("insert_key_sum"),
-        sum(when(col("_change_type") === "delete", col("k")).otherwise(0L)).as("delete_key_sum")
-      )
-      .withColumn("eq_apply", lit(eqApply))
-      .withColumn("compact_invisible", lit(compactInvisible))
-      .orderBy("version")
-    val result = out.collect()
-    feed.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(result: _*), out.schema)
+    withCached(s.read.table("graft_mfst.db.q446t.changes")) { feed =>
+      val fpHead = fp(s.table("graft_mfst.db.q446t"))
+      val fpIns = fp(feed.filter(col("_change_type") === "insert").select("k", "cents"))
+      val fpDel = fp(feed.filter(col("_change_type") === "delete").select("k", "cents"))
+      val eqApply =
+        if (fpHead._1 == fpIns._1 - fpDel._1 && fpHead._2 % P == (((fpIns._2 - fpDel._2) % P) + P) % P) 1L
+        else 0L
+      val compactInvisible = if (feed.filter(col("_commit_version") === 6L).count() == 0L) 1L else 0L
+      val out = feed
+        .filter(col("_commit_version") <= 5L)
+        .groupBy(col("_commit_version").as("version"))
+        .agg(
+          sum(when(col("_change_type") === "insert", 1L).otherwise(0L)).as("n_inserts"),
+          sum(when(col("_change_type") === "delete", 1L).otherwise(0L)).as("n_deletes"),
+          sum(when(col("_change_type") === "insert", col("k")).otherwise(0L)).as("insert_key_sum"),
+          sum(when(col("_change_type") === "delete", col("k")).otherwise(0L)).as("delete_key_sum")
+        )
+        .withColumn("eq_apply", lit(eqApply))
+        .withColumn("compact_invisible", lit(compactInvisible))
+        .orderBy("version")
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    }
   }
 
   // OPTIMIZE ZORDER — q397's Hilbert advisor ENACTED as a catalog
@@ -17570,27 +17067,13 @@ object Queries {
   // ZORDER always pays — then planning-time pruning forever after.
   def manifestZorderOptimize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q447t")
-    s.sql("CREATE TABLE graft_mfst.db.q447t (k BIGINT, m BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    val orders = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        ((col("o_orderkey") * 2654435761L) % 65536L).as("m"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-    // persisted once: the maxK agg materializes the cache; the 8 INSERTs
-    // below re-read it instead of re-scanning the base table
-    orders.persist().createOrReplaceTempView("q447_src")
-    val maxK = orders.agg(max(col("k"))).collect()(0).getLong(0)
-    val w = 1L + maxK / 8L
-    (0 until 8).foreach { i =>
-      s.sql(
-        s"INSERT INTO graft_mfst.db.q447t SELECT /*+ COALESCE(1) */ k, m, cents FROM q447_src " +
-          s"WHERE k >= ${i * w} AND k < ${(i + 1) * w}"
-      )
-    }
-    orders.unpersist()
+    val tdir = mfstTable(s, "q447t", "(k BIGINT, m BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    val w = insertKeyZones(
+      s,
+      "q447t",
+      t(s, dir, "orders").select(col("o_orderkey").as("k"), ((col("o_orderkey") * 2654435761L) % 65536L).as("m"), cents),
+      "k, m, cents"
+    )
     def probe(pred: String): ((Long, Long, Long), Long) = {
       val df = s.sql(s"SELECT count(*) AS n, sum(k) AS kk, sum(cents) AS cc FROM graft_mfst.db.q447t WHERE $pred")
       val r = df.collect()(0)
@@ -17607,7 +17090,6 @@ object Queries {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     val before = fullCensus()
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q447t"
     val log = graft.sources.DurableManifestLog.open(tdir)
     val preVersion = log.head()
     val schema = s.table("graft_mfst.db.q447t").schema
@@ -17664,17 +17146,10 @@ object Queries {
   // files), and the join census itself oracle-pinned.
   def manifestRuntimePruning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q448f")
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q448d")
-    s.sql("CREATE TABLE graft_mfst.db.q448f (k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p)")
-    s.sql("CREATE TABLE graft_mfst.db.q448d (p BIGINT, tag BIGINT)")
+    mfstTable(s, "q448f", "(k BIGINT, cents BIGINT, p BIGINT) PARTITIONED BY (p)")
+    mfstTable(s, "q448d", "(p BIGINT, tag BIGINT)")
     t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
-        (col("o_orderkey") % 8).as("p")
-      )
+      .select(col("o_orderkey").as("k"), cents, (col("o_orderkey") % 8).as("p"))
       .createOrReplaceTempView("q448_fsrc")
     s.sql("INSERT INTO graft_mfst.db.q448f SELECT k, cents, p FROM q448_fsrc")
     // the dim covers every partition; only the tag filter makes p ∈
@@ -17741,20 +17216,12 @@ object Queries {
   // the write path — never a read-back audit.
   def manifestCheckConstraints(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q449t")
-    s.sql("CREATE TABLE graft_mfst.db.q449t (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-      .createOrReplaceTempView("q449_src")
+    val tdir = mfstTable(s, "q449t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    ordersCents(s, dir).createOrReplaceTempView("q449_src")
     s.sql("INSERT INTO graft_mfst.db.q449t SELECT k, cents FROM q449_src") // v1
     // existing rows all conform (prices are positive): the ALTER's
     // validation scan passes and the constraint commits as v2
     s.sql("ALTER TABLE graft_mfst.db.q449t ADD CONSTRAINT cents_pos CHECK (cents > 0)")
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q449t"
     val headBefore = graft.sources.DurableManifestLog.open(tdir).head()
     val violationRefused =
       try { s.sql("INSERT INTO graft_mfst.db.q449t VALUES (0, -1)"); 0L }
@@ -17797,16 +17264,10 @@ object Queries {
   // production corpus for the price of a commit record.
   def manifestShallowClone(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q450s")
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q450c")
-    s.sql("CREATE TABLE graft_mfst.db.q450s (k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
-    t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-      .createOrReplaceTempView("q450_src")
+    mfstTable(s, "q450s", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('cluster_key'='k')")
+    // the clone's table is created by the clone itself
+    dropMfstTable(s, "q450c")
+    ordersCents(s, dir).createOrReplaceTempView("q450_src")
     s.sql("INSERT INTO graft_mfst.db.q450s SELECT k, cents FROM q450_src")
     val wh = graft.sources.ManifestCatalog.defaultWarehouse
     graft.sources.ManifestMaintenance.shallowClone(s"$wh/db/q450s", s"$wh/db/q450c")
@@ -17855,23 +17316,16 @@ object Queries {
   // never rides the bloom.
   def manifestBloomSkipping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q451t")
-    s.sql("CREATE TABLE graft_mfst.db.q451t (k BIGINT, cents BIGINT) TBLPROPERTIES ('bloom_col'='k')")
-    // persisted once: the 8 INSERTs and the bounds query re-read the
-    // cache instead of re-scanning the base table
-    val q451Src = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-      .persist()
-    q451Src.createOrReplaceTempView("q451_src")
-    (0 until 8).foreach { i =>
-      s.sql(s"INSERT INTO graft_mfst.db.q451t SELECT /*+ COALESCE(1) */ k, cents FROM q451_src WHERE k % 8 = $i")
+    mfstTable(s, "q451t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('bloom_col'='k')")
+    // the 8 INSERTs and the bounds query re-read the cache instead of
+    // re-scanning the base table
+    val bounds = withCached(ordersCents(s, dir)) { q451Src =>
+      q451Src.createOrReplaceTempView("q451_src")
+      (0 until 8).foreach { i =>
+        s.sql(s"INSERT INTO graft_mfst.db.q451t SELECT /*+ COALESCE(1) */ k, cents FROM q451_src WHERE k % 8 = $i")
+      }
+      s.sql("SELECT min(k) AS lo, max(k) AS hi FROM q451_src").collect()(0)
     }
-    val bounds = s.sql("SELECT min(k) AS lo, max(k) AS hi FROM q451_src").collect()(0)
-    q451Src.unpersist()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     def probe(pred: String): ((Long, Long), Long) = {
       val df = s.sql(s"SELECT count(*) AS n, sum(cents) AS cc FROM graft_mfst.db.q451t WHERE $pred")
@@ -17909,15 +17363,8 @@ object Queries {
   // seed 42 on the BIGINT); the censuses are oracle-pinned.
   def manifestBucketTransform(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q452t")
-    s.sql("CREATE TABLE graft_mfst.db.q452t (k BIGINT, cents BIGINT) PARTITIONED BY (bucket(8, k))")
-    t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-      .createOrReplaceTempView("q452_src")
+    mfstTable(s, "q452t", "(k BIGINT, cents BIGINT) PARTITIONED BY (bucket(8, k))")
+    ordersCents(s, dir).createOrReplaceTempView("q452_src")
     s.sql("INSERT INTO graft_mfst.db.q452t SELECT k, cents FROM q452_src")
     val bounds = s.sql("SELECT min(k) AS lo, max(k) AS hi FROM q452_src").collect()(0)
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -17961,23 +17408,16 @@ object Queries {
   // and time travel still serves the pre-OPTIMIZE version.
   def manifestBloomMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_mfst", classOf[graft.sources.ManifestCatalog].getName)
-    s.sql("DROP TABLE IF EXISTS graft_mfst.db.q453t")
-    s.sql("CREATE TABLE graft_mfst.db.q453t (k BIGINT, cents BIGINT) TBLPROPERTIES ('bloom_col'='k')")
-    // persisted once: the 8 INSERTs and the max query re-read the cache
-    // instead of re-scanning the base table
-    val q453Src = t(s, dir, "orders")
-      .select(
-        col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")
-      )
-      .persist()
-    q453Src.createOrReplaceTempView("q453_src")
-    (0 until 8).foreach { i =>
-      s.sql(s"INSERT INTO graft_mfst.db.q453t SELECT /*+ COALESCE(1) */ k, cents FROM q453_src WHERE k % 8 = $i")
+    val tdir = mfstTable(s, "q453t", "(k BIGINT, cents BIGINT) TBLPROPERTIES ('bloom_col'='k')")
+    // the 8 INSERTs and the max query re-read the cache instead of
+    // re-scanning the base table
+    val hi = withCached(ordersCents(s, dir)) { q453Src =>
+      q453Src.createOrReplaceTempView("q453_src")
+      (0 until 8).foreach { i =>
+        s.sql(s"INSERT INTO graft_mfst.db.q453t SELECT /*+ COALESCE(1) */ k, cents FROM q453_src WHERE k % 8 = $i")
+      }
+      s.sql("SELECT max(k) AS hi FROM q453_src").collect()(0).getLong(0)
     }
-    val hi = s.sql("SELECT max(k) AS hi FROM q453_src").collect()(0).getLong(0)
-    q453Src.unpersist()
     def probe(): ((Long, Long), Long) = {
       val df = s.sql(s"SELECT count(*) AS n, sum(cents) AS cc FROM graft_mfst.db.q453t WHERE k = $hi")
       val r = df.collect()(0)
@@ -17986,7 +17426,6 @@ object Queries {
       ((r.getLong(0), r.getLong(1)), scanned)
     }
     val (beforeC, beforeScan) = probe()
-    val tdir = s"${graft.sources.ManifestCatalog.defaultWarehouse}/db/q453t"
     val log = graft.sources.DurableManifestLog.open(tdir)
     val preVersion = log.head()
     val schema = s.table("graft_mfst.db.q453t").schema

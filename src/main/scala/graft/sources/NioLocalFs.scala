@@ -1,11 +1,12 @@
 package graft.sources
 
+import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver, FsConstants, FsServerDefaults}
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
@@ -19,9 +20,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   * (Spark's checkpoint file manager) call — runs `readlink`. This
   * subclass does both through `java.nio`: permissions with
   * `Files.setPosixFilePermissions` (the sticky bit, which it cannot
-  * express, still goes to `chmod`), and a non-link's link status is its
-  * plain `getFileStatus`, which is what the stock path returns once
-  * `readlink` prints nothing. Real symlinks take the stock path.
+  * express, still goes to `chmod`), and link statuses with
+  * `Files.readSymbolicLink`. A non-link's link status is its plain
+  * `getFileStatus`, which is what the stock path returns once
+  * `readlink` prints nothing; a link's carries the stock path's fields
+  * (the target's status, or a zero-length one for a dangling target).
+  * Unlike the stock path, which runs `readlink` on the literal path
+  * string, this resolves `file:`-qualified paths too.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -29,9 +34,24 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     if (permission.getStickyBit) super.setPermission(p, permission)
     else Files.setPosixFilePermissions(pathToFile(p).toPath, NioLocalFs.posixPermissions(permission))
 
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
-    else getFileStatus(f)
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val local = pathToFile(f).toPath
+    if (!Files.isSymbolicLink(local)) getFileStatus(f)
+    else {
+      val target = new Path(Files.readSymbolicLink(local).toString)
+      val st =
+        try {
+          val to = getFileStatus(f)
+          new FileStatus(to.getLen, false, to.getReplication, to.getBlockSize, to.getModificationTime,
+            to.getAccessTime, to.getPermission, to.getOwner, to.getGroup, target, f)
+        } catch {
+          case _: FileNotFoundException =>
+            new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "", target, f)
+        }
+      st.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, f, target))
+      st
+    }
+  }
 }
 
 /** `fs.file.impl`: the checksummed [[LocalFileSystem]] over

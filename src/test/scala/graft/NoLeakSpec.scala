@@ -43,17 +43,37 @@ class NoLeakSpec extends SparkSpec {
     )
   }
 
+  /** The manifest-lakehouse fixtures built on [[ManifestFixture]]:
+    * q404–q453 except q407/q408 (ANN serving) and q415 (the scratch
+    * catalog).
+    */
+  private val manifestFixtures = SparkEntry.queries.toSeq
+    .filter { case (name, _) =>
+      val id = name.drop(1).takeWhile(_.isDigit).toInt
+      id >= 404 && id <= 453 && !Set(407, 408, 415).contains(id)
+    }
+    .sortBy(_._1)
+
   test("CDF/manifest staging queries leave no cached blocks after execution") {
-    // r15: these seven stage their batch tables from a persisted projected
-    // source (and q405 additionally caches its snapshot frames); every
-    // persist must be released before the query returns
-    assertNoBlocks("q405_change_data_feed")(Queries.changeDataFeed(spark, sfDir))
-    assertNoBlocks("q406_branch_tag_refs")(Queries.branchTagRefs(spark, sfDir))
-    assertNoBlocks("q409_restore_version")(Queries.restoreVersion(spark, sfDir))
-    assertNoBlocks("q410_snapshot_expiration")(Queries.snapshotExpiration(spark, sfDir))
-    assertNoBlocks("q414_scd2_from_feed")(Queries.scd2FromFeed(spark, sfDir))
-    assertNoBlocks("q418_streaming_cdf_ivm")(Queries.streamingCdfIvm(spark, sfDir))
-    assertNoBlocks("q419_occ_concurrency")(Queries.occConcurrency(spark, sfDir))
+    // they stage batch tables from cached projected sources and cache
+    // feeds and snapshots; every cache must be released before the
+    // query returns
+    assert(manifestFixtures.size == 47)
+    manifestFixtures.foreach { case (name, q) => assertNoBlocks(name)(q(spark, sfDir)) }
+  }
+
+  test("withCached releases its cache when the body throws, and rethrows the body's exception") {
+    spark.catalog.clearCache()
+    val boom = new IllegalStateException("boom")
+    val thrown = intercept[IllegalStateException] {
+      ManifestFixture.withCached(spark.range(100).toDF("id")) { df =>
+        assert(df.count() == 100L) // materializes the cache
+        throw boom
+      }
+    }
+    assert(thrown eq boom)
+    val leaked = spark.sparkContext.getPersistentRDDs
+    assert(leaked.isEmpty, s"withCached left ${leaked.size} cached RDD(s) after a throw")
   }
 
   test("LSH banding self-join materializes its shared side once (ReuseExchange)") {

@@ -17,8 +17,9 @@ class NioLocalFsSpec extends SparkSpec {
     fs
   }
 
+  /** Every status field but the path, which keeps the form it was asked with. */
   private def fields(st: FileStatus) =
-    (st.getPath, st.isFile, st.isDirectory, st.isSymlink, st.getLen, st.getModificationTime,
+    (st.isFile, st.isDirectory, st.isSymlink, st.getLen, st.getModificationTime, st.getAccessTime,
       st.getPermission, st.getOwner, st.getGroup, if (st.isSymlink) Some(st.getSymlink) else None)
 
   test("nio local FS: permissions and link statuses equal the stock local FS's") {
@@ -27,6 +28,7 @@ class NioLocalFsSpec extends SparkSpec {
     val dir = Files.createDirectory(root.resolve("dir"))
     val file = Files.write(dir.resolve("f"), Array[Byte](1, 2, 3))
     val link = Files.createSymbolicLink(root.resolve("link"), file)
+    val dirLink = Files.createSymbolicLink(root.resolve("dirlink"), dir)
     val dangling = Files.createSymbolicLink(root.resolve("dangling"), root.resolve("missing"))
     try {
       for (mode <- Seq("755", "700", "640", "604", "777", "1777")) {
@@ -39,13 +41,15 @@ class NioLocalFsSpec extends SparkSpec {
         }
         assert(pair === Seq(perm, perm), mode)
       }
-      // bare and `file:`-qualified paths (the stock readlink sees no link
-      // behind a qualified one): same status, or the same exception
-      def linkStatus(fs: RawLocalFileSystem, p: Path) =
-        scala.util.Try(fields(fs.getFileLinkStatus(p))).toEither.left.map(_.getClass)
-      for (q <- Seq(dir, file, link, dangling); p <- Seq(new Path(q.toString), new Path(q.toUri)))
-        assert(linkStatus(nio, p) === linkStatus(stock, p), p)
-      assert(nio.getFileLinkStatus(new Path(link.toString)).isSymlink)
+      // bare and `file:`-qualified paths both get the stock status of the
+      // bare path (the stock readlink sees no link behind a qualified one)
+      for (q <- Seq(dir, file, link, dirLink, dangling)) {
+        val expected = fields(stock.getFileLinkStatus(new Path(q.toString)))
+        for (p <- Seq(new Path(q.toString), new Path(q.toUri)))
+          assert(fields(nio.getFileLinkStatus(p)) === expected, p)
+      }
+      for (q <- Seq(link, dirLink, dangling))
+        assert(nio.getFileLinkStatus(new Path(q.toUri)).isSymlink, q)
       val missing = new Path(root.resolve("missing").toUri)
       intercept[FileNotFoundException](nio.getFileLinkStatus(missing))
       intercept[IOException](nio.setPermission(missing, new FsPermission("644")))
