@@ -15688,18 +15688,21 @@ object Queries {
   // against the manifest-backed catalog (q380 proved the connector
   // contract on driver-held rows; q415 the time-travel surface; here
   // both run against REAL parquet + the durable log): each statement
-  // is a group-based rewrite — the operation's scan PINS the version
-  // it served, the ReplaceData write stages the complete
-  // post-statement row set through Spark's own parquet write, and the
-  // publish is ONE STRICT OCC commit (any intervening commit aborts:
-  // with the whole table as one replacement group, even a commuting
-  // append in the scan→commit window would be silently dropped — the
+  // is a group-based rewrite, one replacement group per file — the
+  // operation's scan PINS the version it read and serves only the
+  // files whose zones can satisfy the statement's pushed condition,
+  // the ReplaceData write stages those files' post-statement rows
+  // through Spark's own parquet write, and the publish is ONE STRICT
+  // OCC commit removing exactly the served files (any intervening
+  // commit aborts — a stale replacement would silently undo it, the
   // lost-update anomaly strictness exists to prevent, demonstrated on
-  // a side table and recorded as stale_rewrite_aborted). Every
-  // pre-rewrite version still time-travels (the rewrites ADD history,
-  // never destroy it), and eq_current earns AS-OF-head ≡ plain read.
-  // Scale shape: the statement's cost is the rewrite itself (scan +
-  // write, Spark's vectorized paths); the commit is metadata.
+  // a side table and recorded as stale_rewrite_aborted). The `k % n`
+  // conditions here cannot prune, so each statement rewrites every
+  // file. Every pre-rewrite version still time-travels (the rewrites
+  // ADD history, never destroy it), and eq_current earns AS-OF-head ≡
+  // plain read. Scale shape: the statement's cost is the rewrite of
+  // the files its condition can touch (scan + write, Spark's
+  // vectorized paths); the commit is metadata.
   def manifestRowLevelSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.{DurableManifestLog, ManifestLog}

@@ -807,15 +807,19 @@ private[sources] class ManifestFileTable(
 
   /** SQL `UPDATE` / `DELETE` / `MERGE INTO` over the file table — the
     * group-based rewrite (q380's connector contract, now against
-    * files): the operation's scan serves the current rows and PINS
-    * the version it read; the ReplaceData write receives the complete
-    * post-operation row set, stages it as parquet, and publishes ONE
-    * strict OCC commit (remove = the scanned version's live files,
-    * add = the staged files). Strict means ANY intervening commit
-    * aborts the rewrite — with the whole table as one replacement
-    * group, even a commuting append in the scan→commit window would
-    * be silently dropped by the replacement row set (the lost-update
-    * anomaly), so the only safe outcome is a loud retry-me.
+    * files), one replacement group per FILE: the operation's scan
+    * PINS the version it read and serves only the live files whose
+    * zones (bloom, bucket) can satisfy the statement's pushed
+    * condition; the ReplaceData write receives those files'
+    * post-operation rows, stages them as parquet, and publishes ONE
+    * strict OCC commit (remove = exactly the files the scan served,
+    * add = the staged files). A file the condition cannot touch is
+    * neither read nor rewritten. Strict means ANY intervening commit
+    * aborts the rewrite, even one that touched no served file: the
+    * statement serializes at exactly the version it read (the
+    * conservative posture — a concurrent rewrite of a served file
+    * would otherwise be silently undone, the lost-update anomaly),
+    * and the outcome of a conflict is a loud retry-me.
     */
   override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder =
     // NOTE: no partitioned-table refusal HERE — the analyzer builds
@@ -827,7 +831,7 @@ private[sources] class ManifestFileTable(
       override def build(): RowLevelOperation = {
         ManifestCatalog.requireNoWap(s"${info.command()} (row-level rewrite)")
         new ManifestRowLevelOperation(
-          dir, log, tableSchema, clusterKey, partitionCol, changeFeed, info.command())
+          dir, log, tableSchema, clusterKey, partitionCol, changeFeed, bloomCol, bucket, info.command())
       }
     }
   override def name(): String = tableName
@@ -872,53 +876,9 @@ private[sources] class ManifestFileTable(
           s"file(s) ${liveTargets.mkString(", ")} — use the DV-subtracting snapshot reader"
       )
     }
-    val stats = log.liveStats(version)
-    // under column mapping, footer-derived zones are keyed by the
-    // files' PHYSICAL column names — remap them into this version's
-    // logical namespace so the query's predicates can prune them
-    val p2l = ColumnMapping.physicalToLogical(tableSchema)
-    val files = log
-      .liveFiles(version)
-      .toSeq
-      .sortBy(r => (r.dir, r.file))
-      .map { r =>
-        // per-column zones, with the legacy top-level cluster-key
-        // (min, max) merged in for pre-cols commit records — but only
-        // a REAL zone (min ≤ max): the empty-zone sentinel means "key
-        // zone unrecorded", and merging it would prune every file
-        val statZones: Map[String, (Long, Long, Long)] = stats
-          .get(r)
-          .map { st =>
-            val cols = st.cols.map { case (c, cs) => p2l.getOrElse(c, c) -> ((cs.min, cs.max, cs.nulls)) }
-            clusterKey
-              .filterNot(cols.contains)
-              .filter(_ => st.min <= st.max)
-              .fold(cols)(k => cols + (k -> ((st.min, st.max, -1L))))
-          }
-          .getOrElse(Map.empty)
-        // the partition VALUE enters as an EXACT zone (min = max =
-        // value, zero nulls): partition pruning and zone pruning are
-        // one satisfiability pass, with the partition conjunct the
-        // tightest — pruned before any footer-derived zone can apply
-        val zones = partitionCol
-          .flatMap(pc => ManifestFileTable.partitionValue(r.dir, pc))
-          .fold(statZones) { case (pc, v) => statZones + (pc -> ((v, v, 0L))) }
-        ManifestScanBuilder.FileEntry(
-          s"$dir/${r.dir}/${r.file}",
-          zones,
-          rows = stats.get(r).map(_.rows),
-          bytes = stats.get(r).map(_.bytes).filter(_ > 0L),
-          // the sidecar path is derived, not verified: a file without
-          // one (pre-bloom history, a compaction's output) loads as
-          // absent and is simply never bloom-pruned
-          bloom = bloomCol.map(_ => s"$dir/${r.dir}/${r.file}.bloom"),
-          // the file's bucket ordinal, from its `__gbucket=<v>` dir —
-          // None (a rewrite's output, pre-bucket history) is never
-          // bucket-pruned
-          bucketVal = bucket.flatMap(_ =>
-            ManifestFileTable.partitionValue(r.dir, ManifestFileTable.BucketDirCol).map(_._2))
-        )
-      }
+    val files = ManifestFileTable
+      .fileEntries(dir, log, version, tableSchema, clusterKey, partitionCol, bloomCol, bucket)
+      .map(_._2)
     // hive-layout recovery: with basePath = the table root, Spark's
     // file index parses `<col>=<value>` segments from the leaf paths
     // and serves the partition column the data files do not carry
@@ -959,6 +919,68 @@ private[graft] object ManifestFileTable {
     * never a table column, never in a data file.
     */
   val BucketDirCol = "__gbucket"
+
+  /** `version`'s live files as scan planning consumes them, each with
+    * its ref, in (dir, file) order — what both the table's read scan
+    * and a row-level operation's scan prune.
+    */
+  def fileEntries(
+      dir: String,
+      log: DurableManifestLog,
+      version: Long,
+      tableSchema: StructType,
+      clusterKey: Option[String],
+      partitionCol: Option[String],
+      bloomCol: Option[String],
+      bucket: Option[(String, Int)]
+  ): Seq[(FileRef, ManifestScanBuilder.FileEntry)] = {
+    val stats = log.liveStats(version)
+    // under column mapping, footer-derived zones are keyed by the
+    // files' PHYSICAL column names — remap them into this version's
+    // logical namespace so the query's predicates can prune them
+    val p2l = ColumnMapping.physicalToLogical(tableSchema)
+    log
+      .liveFiles(version)
+      .toSeq
+      .sortBy(r => (r.dir, r.file))
+      .map { r =>
+        // per-column zones, with the legacy top-level cluster-key
+        // (min, max) merged in for pre-cols commit records — but only
+        // a REAL zone (min ≤ max): the empty-zone sentinel means "key
+        // zone unrecorded", and merging it would prune every file
+        val statZones: Map[String, (Long, Long, Long)] = stats
+          .get(r)
+          .map { st =>
+            val cols = st.cols.map { case (c, cs) => p2l.getOrElse(c, c) -> ((cs.min, cs.max, cs.nulls)) }
+            clusterKey
+              .filterNot(cols.contains)
+              .filter(_ => st.min <= st.max)
+              .fold(cols)(k => cols + (k -> ((st.min, st.max, -1L))))
+          }
+          .getOrElse(Map.empty)
+        // the partition VALUE enters as an EXACT zone (min = max =
+        // value, zero nulls): partition pruning and zone pruning are
+        // one satisfiability pass, with the partition conjunct the
+        // tightest — pruned before any footer-derived zone can apply
+        val zones = partitionCol
+          .flatMap(pc => partitionValue(r.dir, pc))
+          .fold(statZones) { case (pc, v) => statZones + (pc -> ((v, v, 0L))) }
+        r -> ManifestScanBuilder.FileEntry(
+          s"$dir/${r.dir}/${r.file}",
+          zones,
+          rows = stats.get(r).map(_.rows),
+          bytes = stats.get(r).map(_.bytes).filter(_ > 0L),
+          // the sidecar path is derived, not verified: a file without
+          // one (pre-bloom history, a compaction's output) loads as
+          // absent and is simply never bloom-pruned
+          bloom = bloomCol.map(_ => s"$dir/${r.dir}/${r.file}.bloom"),
+          // the file's bucket ordinal, from its `__gbucket=<v>` dir —
+          // None (a rewrite's output, pre-bucket history) is never
+          // bucket-pruned
+          bucketVal = bucket.flatMap(_ => partitionValue(r.dir, BucketDirCol).map(_._2))
+        )
+      }
+  }
 
   /** The partition (column, value) a FileRef's dir encodes — the last
     * path segment's hive-style `<col>=<value>`, integral values only.
@@ -1225,8 +1247,10 @@ private[sources] class ManifestWriteBuilder(
 }
 
 /** The group-based row-level operation over a manifest file table:
-  * the scan pins the version it served; the replace commit is STRICT
-  * — valid only while the table is still at exactly that version.
+  * the scan pins the version it read and serves only the files the
+  * statement's condition can touch; the replace commit removes
+  * EXACTLY those files and is STRICT — valid only while the table is
+  * still at exactly that version.
   */
 private[sources] class ManifestRowLevelOperation(
     dir: String,
@@ -1235,9 +1259,13 @@ private[sources] class ManifestRowLevelOperation(
     clusterKey: Option[String],
     partitionCol: Option[String],
     changeFeed: Boolean,
+    bloomCol: Option[String],
+    bucket: Option[(String, Int)],
     cmd: RowLevelOperation.Command
 ) extends RowLevelOperation {
-  @volatile private var scannedVersion: Long = -1L
+  // every scan this operation built: (the version it read, the files
+  // it served) — the commit's remove set is the one scan's files
+  private val served = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[FileRef])]()
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -1252,25 +1280,19 @@ private[sources] class ManifestRowLevelOperation(
         "partition-aligned DELETEs are served metadata-only; other rewrites go through INSERT OVERWRITE"
     )
     val v = log.head()
-    scannedVersion = v
-    val files = log
-      .liveFiles(v)
-      .toSeq
-      .sortBy(r => (r.dir, r.file))
-      .map(r =>
-        ManifestScanBuilder.FileEntry(s"$dir/${r.dir}/${r.file}", Map.empty, rows = None, bytes = None))
-    // pushdownEnabled = false: the rewrite's branches share this scan
-    // (see ManifestScanBuilder) — it must serve EVERY current row
+    val files = ManifestFileTable.fileEntries(dir, log, v, tableSchema, clusterKey, partitionCol, bloomCol, bucket)
+    val refOf = files.map { case (r, e) => e.path -> r }.toMap
+    // RowLevel: the pushed condition prunes whole files and reaches no
+    // deeper (see ManifestScanBuilder.RowLevel); the built scan's
+    // entries are recorded as the replacement groups
     new ManifestScanBuilder(
-      manifestGlue.activeSession, files, clusterKey, tableSchema, options, pushdownEnabled = false,
-      physicalOf = ColumnMapping.logicalToPhysical(tableSchema))
+      manifestGlue.activeSession, files.map(_._2), clusterKey, tableSchema, options,
+      mode = ManifestScanBuilder.RowLevel { kept => served.add(v -> kept.map(e => refOf(e.path))); () },
+      physicalOf = ColumnMapping.logicalToPhysical(tableSchema), bloomCol = bloomCol, bucketSpec = bucket)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
     override def build(): Write = {
-      // the version anchored at scan time; if planning never built the
-      // scan, fall back to the head at write-build (still anchored)
-      val readVersion = if (scannedVersion >= 0) scannedVersion else log.head()
       // a group-based MERGE's rows arrive with MergeRows' leading
       // __row_operation int; UPDATE/DELETE arrive bare — the staged
       // write strips the slot so the files carry exactly the table
@@ -1280,15 +1302,24 @@ private[sources] class ManifestRowLevelOperation(
       val l2p = ColumnMapping.logicalToPhysical(tableSchema)
       ManifestWrites.stagedWrite(
         dir, info, ColumnMapping.physicalSchema(tableSchema), stripOpColumn = true) { refs =>
+        // the rows written are those of the files ONE scan served:
+        // removing any other file would drop rows nobody read, so a
+        // statement that built no scan, or several, refuses to publish
+        val (readVersion, removed) = served.toArray(Array.empty[(Long, Seq[FileRef])]) match {
+          case Array(one) => one
+          case scans =>
+            throw new IllegalStateException(
+              s"row-level $cmd built ${scans.length} scans; its commit must remove exactly the files " +
+                "one scan served — refusing to publish")
+        }
         val stats = ManifestWrites.footerStats(dir, refs, clusterKey.map(k => l2p.getOrElse(k, k)))
-        val removed = log.liveFiles(readVersion).toSeq.sortBy(r => (r.dir, r.file))
         // CDC-ON-WRITE (table property change_feed='true', the Delta
         // enableChangeDataFeed convention): the rewrite job itself
         // stages explicit pre/post-image rows — one key-joined diff of
-        // the removed vs staged files, bounded by the rewrite — so
-        // the commit is streamable through db.t.changes (a rewrite
-        // WITHOUT cdc refuses at feed planning by design: deriving
-        // images per consumer would re-run this diff for each).
+        // the served (removed) vs staged files — so the commit is
+        // streamable through db.t.changes (a rewrite WITHOUT cdc
+        // refuses at feed planning by design: deriving images per
+        // consumer would re-run this diff for each).
         // Requires a cluster key (the diff's join key; key-unique
         // tables, the manifestChanges precondition).
         val cdcRefs =
@@ -1404,8 +1435,10 @@ private[graft] object ManifestWrites {
     * generic over the table schema), written as parquet whose rows
     * carry `change_type` + every table column — exactly what the CDF
     * reader's `changeTypeFromFile` path serves. Cost: one join job
-    * bounded by the REWRITE's files, paid once at write time (the
-    * Delta `_change_data` economics). Returns the staged refs.
+    * over the rewrite's files only — `removed` is exactly what the
+    * row-level scan served, never the rest of the table — paid once
+    * at write time (the Delta `_change_data` economics). Returns the
+    * staged refs.
     */
   def stageCdc(
       dir: String,

@@ -36,7 +36,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * again for row-group pruning inside them. Pruning is file-level and
   * conservative, so every filter is returned as a residual — Spark
   * re-evaluates rows; a wrong zone map can over-read, never
-  * wrong-answer.
+  * wrong-answer. A row-level operation's scan
+  * ([[ManifestScanBuilder.RowLevel]]) runs the same file pruning and
+  * stops there: its kept files are served whole.
   *
   * Scale shape: pruning is |live files| × |conjuncts| driver
   * arithmetic against in-memory zone maps (IN-lists pre-sorted,
@@ -52,13 +54,9 @@ final class ManifestScanBuilder(
     clusterKey: Option[String],
     schema: StructType,
     options: CaseInsensitiveStringMap,
-    // a ROW-LEVEL OPERATION's scan must accept NO pushdown: the
-    // group-based rewrite's branches (updated rows ∪ untouched rows)
-    // share this scan, so baking one branch's condition into it —
-    // zone file-skipping OR parquet data filters — silently drops the
-    // other branch's rows from the replacement set. The plain read
-    // path keeps both layers.
-    pushdownEnabled: Boolean = true,
+    // a query's Read, or a row-level operation's scan (whole files
+    // only; reports what it served) — see [[ManifestScanBuilder.Mode]]
+    mode: ManifestScanBuilder.Mode = ManifestScanBuilder.Read,
     // COLUMN MAPPING (graft.sources.ColumnMapping): logical→physical
     // name indirection. The files carry PHYSICAL names; `schema`,
     // pruned columns, pushed filters, and zone maps are all LOGICAL —
@@ -85,16 +83,17 @@ final class ManifestScanBuilder(
   private var required: StructType = schema
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    if (pushdownEnabled) {
-      catalystFilters = filters
-      // translate to source filters for the zone interpretation; any
-      // column with recorded per-file stats can prune (the per-column
-      // generalization — previously only the cluster key could)
-      zoneFilters = filters
-        .flatMap(e => DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true))
-        .filter(referencesStatted)
-        .toArray
-    }
+    // only a Read hands the filters on to the parquet scan: row-group
+    // skipping inside a row-level operation's kept file would drop the
+    // file's non-matching rows from its replacement set
+    if (mode == ManifestScanBuilder.Read) catalystFilters = filters
+    // translate to source filters for the zone interpretation; any
+    // column with recorded per-file stats can prune (the per-column
+    // generalization — previously only the cluster key could)
+    zoneFilters = filters
+      .flatMap(e => DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true))
+      .filter(referencesStatted)
+      .toArray
     // everything is a residual: file skipping keeps whole files, the
     // engine still evaluates the predicate on the surviving rows
     filters
@@ -268,21 +267,29 @@ final class ManifestScanBuilder(
     * Restricted to the scan's REQUIRED (post-pruning) columns:
     * Catalyst's `PartitionPruning` resolves every reported attribute
     * against the scan's output and fails hard on a pruned-away one.
-    * Empty when pushdown is disabled (a row-level operation's scan
-    * must serve every current row).
+    * Empty for a row-level operation's scan: its served files are the
+    * commit's remove set, fixed when the scan is built.
     */
   def runtimeFilterAttributes: Array[
     org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (!pushdownEnabled) Array.empty
-    else {
-      val visible = required.fieldNames.toSet
-      stattedColumns.filter(visible).toArray.sorted.map(
-        org.apache.spark.sql.connector.expressions.Expressions.column)
+    mode match {
+      case _: ManifestScanBuilder.RowLevel => Array.empty
+      case ManifestScanBuilder.Read =>
+        val visible = required.fieldNames.toSet
+        stattedColumns.filter(visible).toArray.sorted.map(
+          org.apache.spark.sql.connector.expressions.Expressions.column)
     }
 
   private[graft] def toLogicalSchema(s: StructType): StructType = toLogical(s)
 
-  override def build(): Scan = new StatsReportingScan(this, keptEntries)
+  override def build(): Scan = {
+    val kept = keptEntries
+    mode match {
+      case ManifestScanBuilder.RowLevel(served) => served(kept)
+      case ManifestScanBuilder.Read             => ()
+    }
+    new StatsReportingScan(this, kept)
+  }
 }
 
 object ManifestScanBuilder {
@@ -294,6 +301,28 @@ object ManifestScanBuilder {
   def bucketOf(x: Long, n: Int): Long =
     java.lang.Math.floorMod(
       org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(x, 42), n).toLong
+
+  /** What a builder's pushed filters may do. */
+  sealed trait Mode
+
+  /** A query's read: the filters prune files by zone, bloom and bucket
+    * satisfiability, are pushed again into the parquet scan for
+    * row-group skipping, and the statted columns accept runtime
+    * (join-driven) filters.
+    */
+  case object Read extends Mode
+
+  /** A group-based row-level operation's scan (`UPDATE` / `DELETE` /
+    * `MERGE INTO`): each file is one replacement group, so the
+    * statement's pushed condition prunes WHOLE files — a file no row
+    * of which can satisfy it is neither read nor rewritten — and
+    * reaches no deeper: every row of a kept file must reach the
+    * rewrite, the matched ones changed and the others copied. No
+    * runtime filter applies. `served` receives the kept entries when
+    * the scan is built; they are exactly the files the commit may
+    * remove.
+    */
+  final case class RowLevel(served: Seq[FileEntry] => Unit) extends Mode
 
   /** One manifest file as scan planning consumes it: the absolute
     * path; per-column (min, max, nullCount) zones (nullCount −1 =
@@ -447,12 +476,15 @@ object manifestGlue {
 
   /** The input files of every DSv2 file scan in an EXECUTED plan —
     * the q423 introspection: after zone pruning, these must be
-    * exactly the kept files.
+    * exactly the kept files. An executed command (a row-level
+    * `DELETE`'s `CommandResultExec`) is looked through to the plan
+    * that ran it.
     */
   def scanInputFiles(plan: SparkPlan): Seq[String] = {
     def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => unwrap(a.executedPlan)
       case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec       => unwrap(qs.plan)
+      case c: org.apache.spark.sql.execution.CommandResultExec              => unwrap(c.commandPhysicalPlan)
       case other                                                            => other.children.flatMap(unwrap) :+ other
     }
     unwrap(plan).collect { case b: BatchScanExec =>

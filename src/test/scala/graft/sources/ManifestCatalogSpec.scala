@@ -180,12 +180,14 @@ class ManifestCatalogSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2), r.getLong(3)))
     assert(hist.map(x => (x._1, x._2)).toSeq ===
       Seq((0L, "genesis"), (1L, "append"), (2L, "append"), (3L, "replace_delete")))
-    assert(hist(3)._4 === 2L) // the rewrite removed both prior files
+    // the rewrite removed only the [10, 29] file: no key of [0, 9] can satisfy k >= 25
+    assert(hist(3)._4 === 1L)
     val files = spark
       .sql("SELECT min_key, max_key, n_rows FROM graft_mfst.db.mmeta1.files ORDER BY min_key")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // post-delete head: the rewrite's files cover [0, 24] with 25 rows
+    assert(files.contains((0L, 9L, 10L)), s"the untouched [0, 9] file must stay live: ${files.mkString(", ")}")
+    // post-delete head: [0, 9] and the rewrite's files cover [0, 24] with 25 rows
     assert(files.map(_._3).sum === 25L)
     assert(files.map(_._1).min === 0L && files.map(_._2).max === 24L)
   }

@@ -110,9 +110,9 @@ class RuntimeFilteringSpec extends SparkSpec {
   }
 
   test("a row-level operation's scan reports NO filterable attributes") {
-    // the row-level path builds its scan with pushdown disabled (its
-    // branches must share every current row) — runtime filtering must
-    // not re-enter through the back door
+    // the row-level scan's served files are fixed when it is built
+    // (they are the commit's remove set) — runtime filtering must not
+    // shrink them through the back door
     val files = Seq(
       org.apache.spark.sql.graft.ManifestScanBuilder.FileEntry(
         "/tmp/none.parquet", Map("k" -> ((1L, 10L, 0L))), rows = Some(10L), bytes = Some(100L)))
@@ -121,7 +121,7 @@ class RuntimeFilteringSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType))),
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Collections.emptyMap()),
-      pushdownEnabled = false
+      mode = org.apache.spark.sql.graft.ManifestScanBuilder.RowLevel(_ => ())
     )
     assert(b.runtimeFilterAttributes.isEmpty)
     val readable = new org.apache.spark.sql.graft.ManifestScanBuilder(
