@@ -1312,7 +1312,14 @@ private[sources] class ManifestRowLevelOperation(
               s"row-level $cmd built ${scans.length} scans; its commit must remove exactly the files " +
                 "one scan served — refusing to publish")
         }
-        val stats = ManifestWrites.footerStats(dir, refs, clusterKey.map(k => l2p.getOrElse(k, k)))
+        val allStats = ManifestWrites.footerStats(dir, refs, clusterKey.map(k => l2p.getOrElse(k, k)))
+        // a file with no rows (Spark writes one for an empty task, e.g.
+        // a DELETE that removed every row it read) joins neither the
+        // commit nor the CDC diff: it has no zones, so every later
+        // rewrite would read and remove it again
+        val (added, empty) = refs.partition(r => allStats(r).rows > 0L)
+        empty.foreach(r => GraftFs.delete(s"$dir/${r.dir}/${r.file}"))
+        val stats = allStats -- empty
         // CDC-ON-WRITE (table property change_feed='true', the Delta
         // enableChangeDataFeed convention): the rewrite job itself
         // stages explicit pre/post-image rows — one key-joined diff of
@@ -1331,13 +1338,13 @@ private[sources] class ManifestRowLevelOperation(
                 sys.error("change_feed tables need a cluster_key — the CDC diff joins on it")),
               tableSchema,
               removed,
-              refs
+              added
             )
         log.tryCommit(
           "main",
           readVersion,
           s"replace_${cmd.toString.toLowerCase(java.util.Locale.ROOT)}",
-          add = refs,
+          add = added,
           remove = removed,
           stats = stats,
           cdc = cdcRefs,
@@ -1482,7 +1489,9 @@ private[graft] object ManifestWrites {
     * root via Spark's own DSv2 parquet write, then runs `publish`
     * with the staged FileRefs on driver-side commit. `writeSchema`
     * is what the files must carry (the table columns);
-    * `stripOpColumn` tolerates MergeRows' extra leading int.
+    * `stripOpColumn` tolerates MergeRows' extra leading int. The
+    * write's Hadoop configuration reaches the tasks by one broadcast
+    * per job ([[manifestGlue.shipConfOnce]]).
     */
   def stagedWrite(
       dir: String,
@@ -1506,7 +1515,7 @@ private[graft] object ManifestWrites {
         val ib = inner.toBatch
         new BatchWrite {
           override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = {
-            val f = ib.createBatchWriterFactory(pinfo)
+            val f = manifestGlue.shipConfOnce(ib.createBatchWriterFactory(pinfo))
             if (stripOpColumn) new OpStrippingWriterFactory(f, writeSchema) else f
           }
           override def useCommitCoordinator(): Boolean = ib.useCommitCoordinator()

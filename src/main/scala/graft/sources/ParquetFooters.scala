@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -37,7 +38,11 @@ object ParquetFooters {
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(NioLocalFs.defaultHadoopConf())
-    val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    // read options from the session's conf: the one-argument open
+    // builds them over a fresh Configuration, re-parsing the default
+    // XML resources for every staged file
+    val rdr = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), conf), HadoopReadOptions.builder(conf).build())
     try {
       val blocks = {
         val b = rdr.getFooter.getBlocks

@@ -1,14 +1,20 @@
 package org.apache.spark.sql.graft
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream, ObjectStreamClass}
+
+import org.apache.hadoop.conf.Configuration
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.FileScan
+import org.apache.spark.sql.execution.datasources.v2.{FileScan, FileWriterFactory}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -16,6 +22,7 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** The `private[sql]` glue graft's manifest-backed catalog needs —
   * in the `org.apache.spark.sql` package tree solely for access (the
@@ -205,13 +212,43 @@ final class ManifestScanBuilder(
       case _ => true
     }
 
+  /** Each column's integral range `[lo, hi]` under ALL the pushed
+    * comparison conjuncts together: `k > 5 AND k < 3` leaves `k` the
+    * empty range, which no row can satisfy even where every conjunct
+    * alone is satisfiable in a file's zone. Only integral literals
+    * count, so the range is exact (`k > 5` is `k >= 6`).
+    */
+  private def conjunctRanges: Map[String, (Long, Long)] = {
+    val none = (Long.MaxValue, Long.MinValue)
+    zoneFilters.toSeq.flatMap {
+      case sources.EqualTo(c, v)            => asLong(v).map(x => c -> ((x, x)))
+      case sources.EqualNullSafe(c, v)      => asLong(v).map(x => c -> ((x, x)))
+      case sources.GreaterThanOrEqual(c, v) => asLong(v).map(x => c -> ((x, Long.MaxValue)))
+      case sources.LessThanOrEqual(c, v)    => asLong(v).map(x => c -> ((Long.MinValue, x)))
+      case sources.GreaterThan(c, v) =>
+        asLong(v).map(x => c -> (if (x == Long.MaxValue) none else (x + 1, Long.MaxValue)))
+      case sources.LessThan(c, v) =>
+        asLong(v).map(x => c -> (if (x == Long.MinValue) none else (Long.MinValue, x - 1)))
+      case _ => None
+    }.groupMapReduce(_._1)(_._2) { case ((l1, h1), (l2, h2)) => (math.max(l1, l2), math.min(h1, h2)) }
+  }
+
+  /** May the file hold a row inside every column's range? */
+  private def inRanges(ranges: Map[String, (Long, Long)], e: ManifestScanBuilder.FileEntry): Boolean =
+    ranges.forall { case (c, (lo, hi)) =>
+      lo <= hi && e.zones.get(c).forall { case (mn, mx, _) => mn <= hi && mx >= lo }
+    }
+
   /** The surviving files under the pushed filters — exposed so a
     * plan test can assert the scan's inputs equal the manifest
     * arithmetic.
     */
-  def keptEntries: Seq[ManifestScanBuilder.FileEntry] =
+  def keptEntries: Seq[ManifestScanBuilder.FileEntry] = {
+    val ranges = conjunctRanges
     files.filter(e =>
-      zoneFilters.forall(f => satisfiable(f, e.zones) && bloomSatisfiable(f, e) && bucketSatisfiable(f, e)))
+      inRanges(ranges, e) &&
+        zoneFilters.forall(f => satisfiable(f, e.zones) && bloomSatisfiable(f, e) && bucketSatisfiable(f, e)))
+  }
 
   def keptPaths: Seq[String] = keptEntries.map(_.path)
 
@@ -474,6 +511,24 @@ object manifestGlue {
       classOf[ParquetFileFormat]
     ).newWriteBuilder(info)
 
+  /** `f`, shipping its Hadoop configuration once per job instead of
+    * inside every task. Spark's [[FileWriterFactory]] carries the
+    * write's configuration twice (the job description's and its stats
+    * tracker's), each deserialized by every task. This ships the
+    * factory with both replaced by a marker and one broadcast of the
+    * job configuration; see [[ConfBroadcastWriterFactory]]. Other
+    * factories are returned as they are.
+    */
+  def shipConfOnce(f: DataWriterFactory): DataWriterFactory = f match {
+    case fw: FileWriterFactory =>
+      // a NEW holder: in local mode the broadcast keeps the very object
+      // it was given, and the factory's own holders must stay intact
+      val conf = activeSession.sparkContext.broadcast(
+        new SerializableConfiguration(fw.description.serializableHadoopConf.value))
+      new ConfBroadcastWriterFactory(ConfBroadcastWriterFactory.withoutConf(fw), conf)
+    case other => other
+  }
+
   /** The input files of every DSv2 file scan in an EXECUTED plan —
     * the q423 introspection: after zone pruning, these must be
     * exactly the kept files. An executed command (a row-level
@@ -501,4 +556,55 @@ object manifestGlue {
   }
 
   def activeSession: SparkSession = SparkSession.active
+}
+
+/** A [[DataWriterFactory]] shipped as `bytes`, the Java-serialized
+  * bytes of another factory with every [[SerializableConfiguration]]
+  * in it replaced by a marker, plus one broadcast of the
+  * configuration. Each
+  * [[createWriter]] call deserializes its own factory and hands every
+  * marker one PRIVATE copy of the broadcast configuration: Spark's
+  * writer sets the task's `mapreduce.task.*` ids on that conf, so a
+  * shared one would race between the tasks of an executor. The bytes
+  * are written once, on the driver, so every task sees the same job
+  * id.
+  */
+private[sql] final class ConfBroadcastWriterFactory(
+    bytes: Array[Byte],
+    conf: Broadcast[SerializableConfiguration]
+) extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+    val own = new SerializableConfiguration(new Configuration(conf.value.value))
+    val in = new ObjectInputStream(new ByteArrayInputStream(bytes)) {
+      enableResolveObject(true)
+      override def resolveObject(o: AnyRef): AnyRef = o match {
+        case _: ConfBroadcastWriterFactory.ConfMarker => own
+        case other                                    => other
+      }
+      override def resolveClass(d: ObjectStreamClass): Class[_] =
+        try Class.forName(d.getName, false, Thread.currentThread().getContextClassLoader)
+        catch { case _: ClassNotFoundException => super.resolveClass(d) }
+    }
+    try in.readObject().asInstanceOf[DataWriterFactory].createWriter(partitionId, taskId)
+    finally in.close()
+  }
+}
+
+private[sql] object ConfBroadcastWriterFactory {
+  final class ConfMarker extends Serializable
+
+  /** `f` serialized with a [[ConfMarker]] in place of each configuration. */
+  def withoutConf(f: DataWriterFactory): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(bos) {
+      enableReplaceObject(true)
+      override def replaceObject(o: AnyRef): AnyRef = o match {
+        case _: SerializableConfiguration => new ConfMarker
+        case other                        => other
+      }
+    }
+    try out.writeObject(f)
+    finally out.close()
+    bos.toByteArray
+  }
 }

@@ -49,8 +49,9 @@ class ManifestRowLevelPruningSpec extends SparkSpec {
     val prior = log.head()
     val stats = log.liveStats(prior)
     val live = log.liveFiles(prior)
-    // a file without a key zone (an empty rewrite's output) is never pruned
-    val (hit, untouched) = live.partition(r => stats(r).min > stats(r).max || touched(stats(r).min, stats(r).max))
+    // every live file has a key zone: a rewrite commits no empty output
+    assert(live.forall(r => stats(r).min <= stats(r).max), s"a zone-less file is live before $stmt")
+    val (hit, untouched) = live.partition(r => touched(stats(r).min, stats(r).max))
     val df: DataFrame = spark.sql(stmt)
     val scanned = manifestGlue.scanInputFiles(df.queryExecution.executedPlan).map(fileName).toSet
     val v = log.head()
@@ -131,15 +132,25 @@ class ManifestRowLevelPruningSpec extends SparkSpec {
     val feed0 = feedTotals()
     assert(feed0 === Map("insert" -> 400L))
     val v1 = rewrite("mrlp2", "DELETE FROM graft_mfst.db.mrlp2 WHERE k > 120 AND k < 180", t0, t0)((_, _) => false)
+    // the write's one empty task file is neither committed nor kept
+    val log = DurableManifestLog.open(tdir("mrlp2"))
+    assert(log.chain(v1).last.added.isEmpty)
+    assert(log.liveFiles(v1) === log.liveFiles(v1 - 1))
     assert(changesAt("mrlp2", v1).isEmpty)
     assert(feedTotals() === feed0)
-    // a contradiction the per-conjunct zone test cannot see: [0, 99]
-    // has max > 5 and min < 3, so it is read and rewritten unchanged
-    // (with the empty file the DELETE above staged)
-    val v2 = rewrite("mrlp2", "UPDATE graft_mfst.db.mrlp2 SET v = 0 WHERE k > 5 AND k < 3", t0, t0)(
-      (mn, mx) => mx > 5 && mn < 3)
+    // a contradiction across conjuncts: [0, 99] has max > 5 and min < 3,
+    // so each conjunct alone is satisfiable there, but k > 5 AND k < 3
+    // holds for no k, so no file is read or rewritten
+    val v2 = rewrite("mrlp2", "UPDATE graft_mfst.db.mrlp2 SET v = 0 WHERE k > 5 AND k < 3", t0, t0)((_, _) => false)
     assert(changesAt("mrlp2", v2).isEmpty)
     assert(feedTotals() === feed0)
+    // the same ranges prune a read
+    val read = spark.sql("SELECT * FROM graft_mfst.db.mrlp2 WHERE k > 5 AND k < 3")
+    assert(read.collect().isEmpty)
+    assert(manifestGlue.scanInputFiles(read.queryExecution.executedPlan).isEmpty)
+    val edge = spark.sql("SELECT * FROM graft_mfst.db.mrlp2 WHERE k >= 99 AND k <= 200")
+    assert(edge.collect().map(_.getLong(0)).sorted.toSeq === Seq(99L, 200L))
+    assert(manifestGlue.scanInputFiles(edge.queryExecution.executedPlan).size === 2)
   }
 
   test("column mapping: a range UPDATE after a rename prunes by the remapped zones and stays exact") {

@@ -109,6 +109,47 @@ class CdfStreamSpec extends SparkSpec {
     assert(all === Seq(1L, 2L, 3L, 4L))
   }
 
+  test("maxVersionsPerTrigger=1 across a checkpoint restart: the resumed feed is the unbounded read's tail") {
+    useCatalog()
+    spark.sql("DROP TABLE IF EXISTS graft_mfst.db.cdf6")
+    spark.sql("CREATE TABLE graft_mfst.db.cdf6 (k BIGINT, v BIGINT) TBLPROPERTIES ('cluster_key'='k', 'change_feed'='true')")
+    spark.sql("INSERT INTO graft_mfst.db.cdf6 SELECT id, id * 10 FROM range(0, 50)") // v1
+    spark.sql("INSERT INTO graft_mfst.db.cdf6 SELECT id, id * 10 FROM range(50, 100)") // v2
+    val ckpt = s"${graft.operators.Scratch.dir("graft-cdf-restart")}/ckpt"
+    type Change = (Long, Long, String, Long)
+    // one AvailableNow run over the same checkpoint: each batch's rows
+    def drain(): Vector[Vector[Change]] = {
+      val batches = new java.util.concurrent.ConcurrentLinkedQueue[Vector[Change]]()
+      val q = spark.readStream
+        .option("maxVersionsPerTrigger", "1")
+        .table("graft_mfst.db.cdf6.changes")
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          batches.add(df.collect().toVector.map(r =>
+            (r.getAs[Long]("k"), r.getAs[Long]("v"), r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version"))))
+          ()
+        }
+        .start()
+      q.awaitTermination()
+      import scala.jdk.CollectionConverters._
+      batches.asScala.toVector.filter(_.nonEmpty)
+    }
+    val first = drain()
+    spark.sql("UPDATE graft_mfst.db.cdf6 SET v = -v WHERE k BETWEEN 10 AND 19") // v3
+    spark.sql("DELETE FROM graft_mfst.db.cdf6 WHERE k >= 90") // v4
+    spark.sql("INSERT INTO graft_mfst.db.cdf6 SELECT id, id * 10 FROM range(100, 120)") // v5
+    val second = drain()
+    assert(first.map(_.map(_._4).toSet) === Vector(Set(1L), Set(2L)))
+    assert(second.map(_.map(_._4).toSet) === Vector(Set(3L), Set(4L), Set(5L)))
+    val all = spark.table("graft_mfst.db.cdf6.changes").collect().toVector.map(r =>
+      (r.getAs[Long]("k"), r.getAs[Long]("v"), r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version")))
+    assert((first ++ second).flatten.sorted === all.sorted)
+    assert(second.flatten.count(_._3 == "update_postimage") === 10)
+    assert(second.flatten.count(_._3 == "delete") === 10)
+  }
+
   test("offset json roundtrip") {
     val scan = new CdfScan("/nowhere", new org.apache.spark.sql.types.StructType(), 0L)
     val off = CdfOffset(7L)
