@@ -30,15 +30,12 @@ object EngineSession {
       // r15 (guide §2.2): let AQE coalesce the shuffles that MATERIALIZE
       // a cached plan too. Default false pins every persist() pipeline at
       // spark.sql.shuffle.partitions tasks regardless of data size —
-      // measured as 32-task stages over few-KB iterative rounds (Rounds,
-      // CandidateGraph fixtures). Size-adaptive: at 100 TB the same
-      // setting keeps advisory-sized (64 MB) partitions; only physical
-      // partitioning changes, never results. Parameterised for A/B and
-      // for deployments that rely on cached-plan partitioning stability.
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true")
-      )
+      // measured as 32-task stages over few-KB cached inputs (the
+      // iterative operators' edge sets, CandidateGraph fixtures).
+      // Size-adaptive: at 100 TB the same setting keeps advisory-sized
+      // (64 MB) partitions; only physical partitioning changes, never
+      // results.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
 
   /** Local session for tests and ad-hoc runs. */

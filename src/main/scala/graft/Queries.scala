@@ -9607,22 +9607,13 @@ object Queries {
   // total mass per round with floor division only — bit-replayable.
   // Scale shape: each half-round is one edge-keyed join + keyed
   // aggregate over the BOUNDED candidate-pair set (never all-pairs);
-  // rounds snapshot to parquet so the plan never deepens (the
-  // PageRank/CC posture).
+  // every half-round is cut to one local checkpoint so the plan never
+  // deepens (the PageRank/CC posture).
   def hitsScores(s: SparkSession, dir: String): DataFrame = {
     val base = graft.operators.Scratch.dir("graft-hits")
-    // r15 fix of the r14 regression (guide §1.2/§5, VERDICT r14 item 1):
-    // r14 kept every half-iteration in the cache with NO parquet barrier
-    // (parquetEvery=Int.MaxValue). persist bounds recomputation but not
-    // LOGICAL-PLAN growth: each half-round re-embeds the previous one's
-    // full tree (and the CandidateGraph pipeline), so after 16
-    // half-rounds the analyzer/CacheManager walked plans at the 2 GB
-    // string-representation cap — 6.4 s → 1 741 s, all driver-side.
-    // Now every half-iteration is ONE parquet write (the lineage
-    // barrier, r13's plan shape) with the normalizer total OBSERVED on
-    // that same write action and folded back as a literal — r13's result
-    // and plan depth at half of r13's job count (no separate
-    // aggregate-broadcast job per half-round).
+    // every half-iteration is ONE checkpoint action with the normalizer
+    // total OBSERVED on it and folded back as a literal — no separate
+    // aggregate-broadcast job per half-round.
     val One = 1000000000L
     // DECIMAL(38,0) on the product: pre-normalization mass reaches
     // |E|·10⁹, so value·10⁹ would pass 2⁶³ on dense graphs. `tot` is the
@@ -9634,14 +9625,10 @@ object Queries {
         expr(s"CAST(CAST($value AS DECIMAL(38,0)) * $One div CAST('${tot.toPlainString}' AS DECIMAL(38,0)) AS BIGINT)")
           .as(value)
       )
-    // one Rounds per SIDE (distinct barrier paths): the alternation
-    // means the latest h is still live (h_final reads it) when the next
-    // a materializes. parquetEvery=1: every half-round is a barrier —
-    // the mutual recursion re-embeds the other side's plan each
-    // half-round, so any cached (uncut) stretch grows the tree per the
-    // r14 lesson above.
-    val hRounds = new graft.operators.Rounds(s, s"$base/h", parquetEvery = 1)
-    val aRounds = new graft.operators.Rounds(s, s"$base/a", parquetEvery = 1)
+    // one Rounds per SIDE: the alternation means the latest h is still
+    // live (h_final reads it) when the next a materializes.
+    val hRounds = new graft.operators.Rounds(s, s"$base/h")
+    val aRounds = new graft.operators.Rounds(s, s"$base/a")
     val edgesDf = graft.operators.CandidateGraph
       .pairs(s, dir)
       .select(greatest(col("d1"), col("d2")).as("src"), least(col("d1"), col("d2")).as("dst"))
@@ -9676,8 +9663,8 @@ object Queries {
           // final frames to parquet so the returned plan reads plain scans
           (aRounds.finish(a, "a_final"), hRounds.finish(h, "h_final"))
         } finally {
-          // every cached round is released before return, also on error
-          // (ADVICE r14: persisted blocks must not leak on throw)
+          // every checkpointed round is released before return, also on
+          // error (persisted blocks must not leak on throw)
           aRounds.release()
           hRounds.release()
         }
@@ -10763,15 +10750,10 @@ object Queries {
   // connected components (LPA refines CC: it can SPLIT weakly-joined
   // blobs CC glues together). Scale shape: each round is one
   // edge-keyed join + two keyed aggregates over the bounded candidate
-  // graph, snapshot per round — the q150/q183 posture.
+  // graph, one local checkpoint per round — the q150/q183 posture.
   def labelPropagation(s: SparkSession, dir: String): DataFrame = {
     val base = graft.operators.Scratch.dir("graft-lpa")
     val pairs = graft.operators.CandidateGraph.pairs(s, dir)
-    // r15: rounds materialize through Rounds with the default 2-round
-    // parquet barrier — each LPA round references the previous labels
-    // TWICE (join + union), so an uncut plan doubles per round; the r14
-    // never-cut variant (parquetEvery=6 over 4 rounds) regressed ~1.4×
-    // on plan/cache-canonicalization growth (VERDICT r14)
     val rounds = new graft.operators.Rounds(s, base)
     val edgesDf = pairs
       .select(col("d1").as("src"), col("d2").as("dst"))
@@ -10796,8 +10778,9 @@ object Queries {
         labels
       } finally rounds.release()
     }
+    // read twice below, uncached: it re-aggregates finish's small parquet
+    // output, and a cache here would outlive the returned frame
     val com = finalLabels.groupBy(col("lbl").as("community")).agg(count(lit(1)).as("n_members"))
-    com.persist()
     com
       .filter(col("n_members") >= 2)
       .crossJoin(broadcast(com.agg(count(lit(1)).as("n_communities"))))

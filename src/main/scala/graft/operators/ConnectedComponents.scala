@@ -26,19 +26,14 @@ import org.apache.spark.sql.functions._
   * ever bites.)
   *
   * Lineage: every round is MATERIALIZED before the next is planned —
-  * via [[Rounds]]: persist + one forcing action per round (with the
-  * convergence checksum observed inline on that same action), the
-  * previous round's blocks dropped as the loop advances, and a parquet
-  * barrier every few rounds to cut lineage growth (each round
-  * references the previous labels twice — self ∪ via-neighbor — so an
-  * uncut plan doubles per round; the barrier bounds it, and on a
-  * cluster bounds recomputation after executor loss exactly like
-  * GraphX's checkpointInterval). The FINAL labeling is written to
-  * parquet and read back, so the returned frame is a plain scan, and
-  * no cached blocks outlive the call (NoLeakSpec discipline). The r14
-  * optimization round replaced the old parquet-snapshot-per-round +
-  * separate-checksum-job discipline: same rounds, same results, half
-  * the jobs (guide §1/§2.4 — remove passes, not work).
+  * via [[Rounds]]: one local checkpoint per round (with the convergence
+  * checksum observed inline on that same action), which cuts the plan
+  * to one leaf (each round references the previous labels twice — self
+  * ∪ via-neighbor — so an uncut plan would double per round), the
+  * previous round's blocks dropped as the loop advances. The FINAL
+  * labeling is written to parquet and read back, so the returned frame
+  * is a plain scan, and no checkpoint blocks outlive the call
+  * (NoLeakSpec discipline).
   *
   * Determinism: min-label is order-free — the converged labeling is a
   * pure function of the graph, independent of partitioning, round
@@ -93,12 +88,7 @@ object ConnectedComponents {
       .unionByName(edges.select(b.as("src"), a.as("dst")))
       .persist()
 
-    // parquetEvery=2 (the Rounds default): each round references the
-    // previous labels TWICE (self ∪ via-neighbor), so an uncut plan
-    // doubles per round — the 2-round barrier bounds the tree at one
-    // doubling (ADVICE r14: parquetEvery 1-2 for double-reference
-    // rounds; 6 let q358's plans grow 2^6-fold between barriers)
-    val rounds = new Rounds(spark, base, parquetEvery = 2)
+    val rounds = new Rounds(spark, base)
     try {
       var (labels, m0) = rounds.next(nodes.select(id.as("id"), id.as("lbl")), Seq(checkCol))
       var prevSum = asSum(m0)
@@ -126,7 +116,7 @@ object ConnectedComponents {
       // the returned frame is a plain parquet scan (unchanged contract)
       rounds.finish(labels.withColumnRenamed("lbl", "cluster"), "cc_labels")
     } finally {
-      // no cached blocks outlive the call, also on error (ADVICE r14)
+      // no cached or checkpointed blocks outlive the call, also on error
       rounds.release()
       sym.unpersist()
     }

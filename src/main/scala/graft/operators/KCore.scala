@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   * endpoint filters are semi joins, nothing global. Like
   * [[ConnectedComponents]], each round references the previous edge
   * set twice (once per endpoint), so lineage would DOUBLE per round;
-  * per-round materialization through [[Rounds]] (cache-backed, parquet
-  * barrier periodically and at the final round) keeps plans shallow and
-  * bounds recomputation, the same pattern as CC/PageRank.
+  * [[Rounds]] cuts it with one local checkpoint per round (the final
+  * round goes to parquet), the same pattern as CC/PageRank.
   */
 object KCore {
 
@@ -34,10 +33,7 @@ object KCore {
   def kcore(edges: DataFrame, a: Column, b: Column, k: Int, rounds: Int, scratchDir: Option[String] = None): DataFrame = {
     val spark = edges.sparkSession
     val scratch = scratchDir.getOrElse(Scratch.dir("graft-kcore"))
-    // parquetEvery=2: each round references the previous edge set THREE
-    // times (sym union + two semi-joins), so an uncut plan triples per
-    // round — the 2-round barrier bounds it (ADVICE r14)
-    val rs = new Rounds(spark, scratch, parquetEvery = 2)
+    val rs = new Rounds(spark, scratch)
     var e = edges.select(a.as("u"), b.as("v"))
     try
       for (r <- 1 to rounds) {
@@ -50,12 +46,12 @@ object KCore {
         val next = e
           .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
           .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
-        // intermediate rounds materialize into the cache; the FINAL round
-        // goes to parquet because the returned degree frame reads it after
-        // this call releases the cached rounds (Rounds doc)
+        // intermediate rounds are local checkpoints; the FINAL round goes
+        // to parquet because the returned degree frame reads it after this
+        // call releases the live round (Rounds doc)
         e = if (r == rounds) rs.finish(next, s"round$r") else rs.next(next)._1
       }
-    finally rs.release() // no cached round outlives the call, also on error
+    finally rs.release() // no checkpointed round outlives the call, also on error
     e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       .groupBy(col("u").as("id"))
       .agg(count(lit(1)).as("deg"))

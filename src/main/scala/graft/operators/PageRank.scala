@@ -30,18 +30,20 @@ import org.apache.spark.sql.functions._
   * node key, nothing global. Unlike [[ConnectedComponents]] (whose
   * rounds reference the previous labels TWICE, doubling lineage per
   * round), PageRank references the previous ranks once — lineage
-  * grows linearly — so snapshotting (write parquet, read back) every
-  * round would pay 10 job+IO cycles for nothing. Snapshots happen
-  * every `snapshotEvery` rounds (and at the end): plans stay shallow,
-  * un-materialized rounds fuse into one job, nothing is recomputed
-  * (each intermediate is consumed exactly once). Iteration count is a
-  * fixed parameter (rank deltas shrink geometrically — 10 rounds is
-  * the conventional budget), so wall time is linear in |E| · iters
-  * with no convergence action at all.
+  * grows linearly — so materializing every round would pay 10 jobs for
+  * nothing. Every `SnapshotEvery` rounds the ranks are cut to one local
+  * checkpoint through [[Rounds]], and the final round goes to parquet:
+  * plans stay shallow, un-materialized rounds fuse into one job, nothing
+  * is recomputed (each intermediate is consumed exactly once).
+  * Iteration count is a fixed parameter (rank deltas shrink
+  * geometrically — 10 rounds is the conventional budget), so wall time
+  * is linear in |E| · iters with no convergence action at all.
   */
 object PageRank {
 
   val One: Long = 1000000000000L // fixed-point unit: total mass = 1e12
+
+  private val SnapshotEvery = 5 // rounds between lineage cuts (see the object doc)
 
   /** One row per node: (id, deg, pr) — `pr` the floored fixed-point
     * rank after `iters` message-passing rounds; `deg` the undirected
@@ -56,7 +58,6 @@ object PageRank {
       b: Column,
       iters: Int = 10,
       damping: Int = 85, // percent
-      snapshotEvery: Int = 5,
       scratchDir: Option[String] = None
   ): DataFrame = {
     val spark = nodes.sparkSession
@@ -78,12 +79,7 @@ object PageRank {
       .persist()
     val deg = snapshot(sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), "deg")
 
-    // parquetEvery=1: each materialization point (every snapshotEvery
-    // rounds) is a true parquet lineage barrier. PageRank's lineage is
-    // linear (each round references pr once), so the un-materialized
-    // stretch between barriers stays shallow; the barrier itself keeps
-    // the analyzer walk constant per snapshot (Rounds doc, r14 lesson)
-    val rounds = new Rounds(spark, base, parquetEvery = 1)
+    val rounds = new Rounds(spark, base)
     try {
       // driver-side scalars: node count fixes the teleport term — the
       // same dimension-sized action as CC's convergence checksum (this
@@ -108,12 +104,12 @@ object PageRank {
             (lit(teleport) + expr(s"($damping * coalesce(inflow, 0L)) div 100")).as("pr")
           )
         if (i == iters) pr = rounds.finish(pr, s"round_$i")
-        else if (i % snapshotEvery == 0) pr = rounds.next(pr)._1
+        else if (i % SnapshotEvery == 0) pr = rounds.next(pr)._1
       }
       pr.join(deg, Seq("id"), "left").select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"), col("pr"))
     } finally {
       // the final round's parquet backs the returned frame; the loop
-      // caches are done — released also on error (ADVICE r14)
+      // caches and checkpoints are done — released also on error
       rounds.release()
       ids.unpersist()
       sym.unpersist()

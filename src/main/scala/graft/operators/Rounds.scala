@@ -1,90 +1,69 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Persist-backed round materialization for iterative operators
-  * (connected components, label propagation, k-core, truss peeling,
-  * HITS, PageRank).
+/** One lineage cut per round for iterative operators (connected
+  * components, label propagation, k-core, HITS, PageRank).
   *
-  * The old discipline snapshotted EVERY round to parquet (write + read
-  * back) and ran convergence checksums as separate aggregation jobs.
-  * That is robust but pays, per round: a parquet encode + commit
-  * protocol + re-listing on the driver, and one extra full pass for the
-  * checksum. Profiled at sf0.1 (guide §1): q330_hits ran 117 jobs with
-  * half its wall in driver-side gaps between them; q358 ran 106.
+  * Catalyst's analyzer and optimizer walk the whole logical tree on
+  * every action. A round that re-embeds its predecessor's tree — CC's
+  * self ∪ via-neighbor and k-core's semi joins reference it two or
+  * three times, HITS re-embeds the other side each half-round — grows
+  * that tree with every round, geometrically when the references
+  * multiply: r14's q330 let 16 half-rounds grow uncut into the 2 GB
+  * plan-string cap (6.4 s → 1 741 s, all driver-side). So [[next]]
+  * cuts EVERY round, with no per-operator interval to tune:
   *
-  * This helper keeps the same structure — each round is materialized
-  * before the next is planned, lineage is cut periodically, the final
-  * frame handed back to callers is a plain parquet scan — but:
+  *  - one action, `Dataset.localCheckpoint()`, materializes the round
+  *    into executor blocks and returns a frame whose plan is a single
+  *    `LogicalRDD` leaf — no parquet encode, commit protocol or
+  *    re-listing, and the plan the next round builds on never grows
+  *    with the round count;
+  *  - convergence/census metrics ride that same action via
+  *    `Dataset.observe` — no separate checksum job;
+  *  - the previous round's checkpoint RDD is unpersisted once the new
+  *    round is materialized, so exactly one round is live between
+  *    calls (two only while the next one is being computed);
+  *  - [[finish]] writes the final frame to parquet, releases the live
+  *    round, and returns the plain parquet scan — the returned frame
+  *    outlives the operator and holds no blocks (the NoLeakSpec
+  *    discipline); [[release]] drops the live round for callers that
+  *    stop early or throw.
   *
-  *  - a non-barrier round materializes into the block-manager cache
-  *    (`persist()` + `count()`), not a parquet file: one action, no
-  *    commit protocol, no re-listing;
-  *  - convergence/census metrics ride the SAME action via
-  *    `Dataset.observe` (`CollectMetrics` evaluates inline while rows
-  *    stream into the cache OR into the parquet write at barrier
-  *    rounds) — the separate checksum job disappears;
-  *  - the previous round's blocks are dropped as soon as the next round
-  *    is materialized, so at most two rounds are ever cached;
-  *  - every `parquetEvery` rounds the round is written straight to
-  *    parquet (no persist, the observation rides the write) and
-  *    re-read, TRUNCATING the logical plan. Persist bounds
-  *    recomputation but NOT logical-plan growth — downstream plans
-  *    still embed the cached frame's full tree, and the analyzer /
-  *    CacheManager canonicalization walk that tree on every action.
-  *    r14 lesson (q330_hits): parquetEvery=Int.MaxValue over a round
-  *    that re-embeds a large candidate-generation pipeline exploded
-  *    plans to the 2 GB string cap and regressed 6.4 s → 1 741 s.
-  *    Operators whose round references the previous frame MORE THAN
-  *    ONCE (CC's self ∪ via-neighbor, k-core's two semi-joins) double
-  *    the plan per round and need parquetEvery 1–2; a linear lineage
-  *    (PageRank) tolerates more. On a cluster the barrier also bounds
-  *    recomputation after executor loss, like GraphX's
-  *    checkpointInterval;
-  *  - [[finish]] writes the final frame to parquet, releases every
-  *    cached round, and returns the plain scan — callers' returned-
-  *    frame contract is unchanged, and no cached blocks outlive the
-  *    operator (the NoLeakSpec discipline).
+  * Checkpoint blocks replace recomputable lineage, which has two
+  * consequences:
+  *
+  *  - a frame that still reads a RELEASED round fails with a missing
+  *    checkpoint block error instead of silently recomputing it. Every
+  *    caller builds round n+1 from round n only; keep it that way;
+  *  - on a real cluster a lost executor takes its blocks with it and
+  *    fails the job, where a parquet barrier would have bounded the
+  *    recomputation. Every harness here runs `local[N]`.
   */
-final class Rounds(spark: org.apache.spark.sql.SparkSession, base: String, parquetEvery: Int = 2) {
+final class Rounds(spark: SparkSession, base: String) {
 
-  private var prev: Option[DataFrame] = None
-  private var n = 0
+  private var live: Option[RDD[_]] = None
 
   /** Materialize one round. Returns the frame the NEXT round should
-    * build on (cached, or a parquet scan at barrier rounds) plus the
-    * observed metrics (empty map when none were asked for).
+    * build on (a one-node checkpoint plan) plus the observed metrics
+    * (empty map when none were asked for).
     */
   def next(df: DataFrame, metrics: Seq[Column] = Nil): (DataFrame, Map[String, Any]) = {
-    n += 1
     val obs = if (metrics.nonEmpty) Some(Observation()) else None
-    val observed = obs match {
-      case Some(o) => df.observe(o, metrics.head, metrics.tail: _*)
-      case None => df
-    }
-    if (n % parquetEvery == 0) {
-      // barrier round: ONE action — the parquet write — with the
-      // observation riding it; no persist, and the returned scan truly
-      // truncates the logical plan
-      val path = s"$base/round_barrier_$n"
-      observed.write.mode("overwrite").parquet(path)
-      val got: Map[String, Any] = obs.map(_.get).getOrElse(Map.empty)
-      prev.foreach(_.unpersist())
-      prev = None
-      (spark.read.parquet(path), got)
-    } else {
-      val cached = observed.persist()
-      cached.count()
-      val got: Map[String, Any] = obs.map(_.get).getOrElse(Map.empty)
-      prev.foreach(_.unpersist())
-      prev = Some(cached)
-      (cached, got)
-    }
+    val cut = obs.fold(df)(o => df.observe(o, metrics.head, metrics.tail: _*)).localCheckpoint()
+    val got: Map[String, Any] = obs.map(_.get).getOrElse(Map.empty)
+    release()
+    // the checkpoint's blocks belong to the RDD under the LogicalRDD
+    // leaf; `cut.unpersist()` would look in the CacheManager and miss them
+    live = cut.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+    (cut, got)
   }
 
   /** Write `df` (typically the last round or a projection of it) to
-    * `base/name`, release every cached round, and return the plain
-    * parquet scan.
+    * `base/name`, release the live round, and return the plain parquet
+    * scan.
     */
   def finish(df: DataFrame, name: String): DataFrame = {
     val path = s"$base/$name"
@@ -93,11 +72,9 @@ final class Rounds(spark: org.apache.spark.sql.SparkSession, base: String, parqu
     spark.read.parquet(path)
   }
 
-  /** Drop any still-cached round (for callers that parquet the final
-    * frame themselves).
-    */
+  /** Drop the live round's checkpoint blocks. */
   def release(): Unit = {
-    prev.foreach(_.unpersist())
-    prev = None
+    live.foreach(_.unpersist(blocking = false))
+    live = None
   }
 }

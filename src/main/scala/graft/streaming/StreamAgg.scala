@@ -459,8 +459,6 @@ object StreamAgg {
           .start()
         try q.awaitTermination()
         finally q.stop()
-        if (sys.env.contains("GRAFT_LATE_DEBUG"))
-          q.recentProgress.foreach(p => System.err.println(s"[late-debug] ${p.json}"))
         q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
       }
 

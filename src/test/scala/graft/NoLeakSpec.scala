@@ -32,7 +32,13 @@ class NoLeakSpec extends SparkSpec {
     assertNoBlocks("q36_ann_ivf (training cache unpersisted)")(Queries.annIvf(spark, sfDir))
     assertNoBlocks("q51_embed_near_dup_lsh")(Queries.embedNearDupLsh(spark, sfDir))
     assertNoBlocks("q71_tfidf")(Queries.tfidf(spark, sfDir))
-    assertNoBlocks("q80_dedup_clusters (per-round caches unpersisted)")(Queries.dedupClusters(spark, sfDir))
+    // every Rounds-backed graph query: per-round checkpoints unpersisted
+    assertNoBlocks("q80_dedup_clusters")(Queries.dedupClusters(spark, sfDir))
+    assertNoBlocks("q150_pagerank")(Queries.pagerank(spark, sfDir))
+    assertNoBlocks("q183_kcore")(Queries.kcoreDocs(spark, sfDir))
+    assertNoBlocks("q330_hits")(Queries.hitsScores(spark, sfDir))
+    assertNoBlocks("q350_label_propagation")(Queries.labelPropagation(spark, sfDir))
+    assertNoBlocks("q358_incremental_clusters")(Queries.incrementalClusters(spark, sfDir))
     assertNoBlocks("q105_minhash_estimate")(Queries.minhashEstimate(spark, sfDir))
     assertNoBlocks("spec-only jaccardPairs")(
       graft.operators.NearDup.jaccardPairs(
